@@ -1,14 +1,15 @@
 """Dump full ``explain("formatted")`` output for named queries.
 
-Round-13 optimization deliverable: ``plans/r13/<query>_<tag>.txt`` per
-touched query, captured before and after each change so the judge can
-diff plan shapes (Exchange count, join strategy, PushedFilters,
-codegen spans) against the claims in OPTIMIZATION_r13.md.
+Writes ``plans/r<round>/<query>_<tag>.txt`` per touched query, captured
+before and after each change so plan shapes (Exchange count, join
+strategy, PushedFilters, codegen spans) can be diffed against the
+claims in OPTIMIZATION_r<round>.md.
 
-Usage: python scripts/dump_plan_r13.py <tag> <name> [<name> ...]
-       (tag is e.g. "before" / "after"; sf dir from $SPARK_GRAFT_SF_DIR,
-        default sf0.1 — plans are shape-stable across SFs, but the bench
-        SF is the one whose AQE thresholds matter)
+Usage: python scripts/dump_plan.py <round> <tag> <name> [<name> ...]
+       (round is e.g. 13; tag is e.g. "before" / "after"; sf dir from
+        $SPARK_GRAFT_SF_DIR, default sf0.1 — plans are shape-stable
+        across SFs, but the bench SF is the one whose AQE thresholds
+        matter)
 """
 
 from __future__ import annotations
@@ -23,16 +24,17 @@ from sleep_edf_data_pipeline_spark.session import get_spark
 
 
 def main() -> None:
-    tag = sys.argv[1]
-    names = sys.argv[2:]
+    rnd = f"r{sys.argv[1]}"
+    tag = sys.argv[2]
+    names = sys.argv[3:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     out_dir = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
         "plans",
-        "r13",
+        rnd,
     )
     os.makedirs(out_dir, exist_ok=True)
-    spark = get_spark(app_name="dump-plan-r13")
+    spark = get_spark(app_name=f"dump-plan-{rnd}")
     queries, _ = registry.collect()
     for name in names:
         df = queries[name](spark, sf_dir)

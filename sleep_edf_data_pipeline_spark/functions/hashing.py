@@ -50,8 +50,3 @@ def perm_coeffs(k: int) -> list[tuple[int, int]]:
 def perm_hash(h: Column, a: int, b: int) -> Column:
     """j-th permutation of a base hash: ``(a*(h % P) + b) % P``."""
     return (F.lit(a) * (h % F.lit(PERM_P)) + F.lit(b)) % F.lit(PERM_P)
-
-
-def perm_hash_sql(expr: str, a: int, b: int) -> str:
-    """DuckDB twin of :func:`perm_hash` (same values)."""
-    return f"(({a} * (({expr}) % {PERM_P}) + {b}) % {PERM_P})"

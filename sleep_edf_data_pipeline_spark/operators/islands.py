@@ -135,8 +135,9 @@ def with_main_episode_bounds(
 ) -> DataFrame:
     """Join-free main-episode bounds via windows (R10-R14 fused).
 
-    Equivalent to rank_episodes + episode_bounds + with_period_flag but
-    expressed entirely as windows sharing the entity partitioning:
+    Equivalent to rank_episodes + episode_bounds + a broadcast left join
+    of the bounds, but expressed entirely as windows sharing the entity
+    partitioning:
 
     - per-episode sleep totals: sum over (entity, episode) — satisfied
       by hash(entity) clustering, sort-only;
@@ -169,23 +170,3 @@ def with_main_episode_bounds(
         F.lit(False),
     )
     return df.withColumn("is_in_period", flag).drop("_ep_sleep_total", "_ep_rank")
-
-
-def with_period_flag(
-    episodes: DataFrame,
-    bounds: DataFrame,
-    partition_by: Sequence[str],
-    idx_col: str,
-    out_col: str = "is_in_period",
-) -> DataFrame:
-    """Left join bounds + ``coalesce(idx between onset and final, false)``.
-
-    Entities with no in-state rows keep null bounds → flag false (R13-R14).
-    Reference: ``sleep_metrics.sql:174-180``.
-    """
-    flagged = episodes.join(F.broadcast(bounds), list(partition_by), "left")
-    in_period = F.coalesce(
-        F.col(idx_col).between(F.col("onset_idx"), F.col("final_idx")),
-        F.lit(False),
-    )
-    return flagged.withColumn(out_col, in_period)

@@ -81,18 +81,6 @@ def with_transition_flag(
     return df.withColumn(out_col, flag)
 
 
-def with_running_sum(
-    df: DataFrame,
-    col: str,
-    partition_by: Sequence[str],
-    order_by: Sequence[str],
-    out_col: str,
-) -> DataFrame:
-    """sum(col) over rows unbounded preceding..current (R9)."""
-    w = entity_window(partition_by, order_by).rowsBetween(Window.unboundedPreceding, 0)
-    return df.withColumn(out_col, F.sum(col).over(w))
-
-
 #: Fixed-point scale for z-score power sums: 2^20 (≈ 1e-6 quantization,
 #: the same precision as the round-to-6 output contract).  Smaller than
 #: FP_SCALE because the SQUARED sums must fit DECIMAL(38,0):
@@ -110,7 +98,6 @@ def with_group_zscore(
     df: DataFrame,
     cols: Sequence[str],
     partition_by: Sequence[str],
-    order_by: Sequence[str] = (),
     suffix: str = "_z",
 ) -> DataFrame:
     """Per-group z-score via grouped power sums + broadcast join (R19).
@@ -123,8 +110,7 @@ def with_group_zscore(
     mean/std derive from fixed-point power sums: ``floor(x·2^20)``
     summed exactly in DECIMAL (order-free), then one double expression
     per statistic — bit-identical across runs, engines, partition
-    lengths and merge orders (the ``order_by`` parameter is kept for
-    API compatibility and ignored).
+    lengths and merge orders.
 
     The sums come from one map-side-combinable ``groupBy`` and are
     broadcast-joined back (null-safe on the keys, mirroring window

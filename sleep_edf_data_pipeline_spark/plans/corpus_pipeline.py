@@ -259,22 +259,10 @@ def build_corpus(
         max_records_per_file=10_000,
     )
 
-    stage_names = [
-        "corpus_raw",
-        "corpus_quality",
-        "corpus_exact_dedup",
-        "corpus_neardup",
-        "corpus_clean",
-        *(["corpus_selected"] if select else []),
-        "corpus_chunks",
-        "corpus_split",
-    ]
-    audit_rows = [(name, built[name].count()) for name in stage_names]
+    audit_rows = [(m.name, built[m.name].count()) for m in models]
     audit = spark.createDataFrame(audit_rows, "stage string, rows bigint")
     audit.coalesce(1).write.mode("overwrite").parquet(f"{out_dir}/audit")
-    cached = ["corpus_exact_dedup", "corpus_neardup", "corpus_split"]
-    if select:
-        cached.append("corpus_selected")
-    for name in cached:
-        built[name].unpersist()
+    for m in models:
+        if m.materialization == "cached":
+            built[m.name].unpersist()
     return audit, built

@@ -2,15 +2,17 @@
 
 The reference's ``dbt build`` interleaves each model with its tests and
 stops dependents on failure (``pipeline.py:156-173``).  Here a model is
-a pure DataFrame function plus optional checks; the runner materializes
-nodes topologically and gates every downstream node on its parents'
-checks.
+a pure DataFrame function plus optional checks; the runner builds nodes
+topologically, and every node takes the same path: build the frame,
+materialize it, register it as a temp view, gate it with
+:func:`~..quality.validate.assert_checks`, record it in ``built``.  A
+failing gate raises before any dependent builds.
 
-Materialization mirrors dbt configs: "view" → temp view (recomputed by
-Catalyst at each use), "table" → persisted parquet + re-registered
-(marts).  The shared intermediate is cached when two marts consume it
-(the reference gets this for free inside one DuckDB process; Spark
-needs the explicit persist to avoid recompute).
+Materialization mirrors dbt configs: "view" → nothing (recomputed by
+Catalyst at each use), "cached" → persisted (the shared intermediate two
+marts consume; the reference gets this for free inside one DuckDB
+process, Spark needs the explicit persist to avoid recompute), "table"
+→ parquet overwritten under ``warehouse_dir`` and read back (marts).
 """
 
 from __future__ import annotations
@@ -20,12 +22,7 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..quality.validate import (
-    Check,
-    assert_checks,
-    assert_observed,
-    observed_checks,
-)
+from ..quality.validate import Check, assert_checks
 
 
 @dataclass
@@ -57,28 +54,16 @@ class ModelRunner:
             for dep in m.depends_on:
                 build(dep)
             df = m.build(self.spark)
-            if m.materialization == "table" and self.warehouse_dir:
-                # Row-wise checks ride the materializing write itself
-                # (Dataset.observe) — the validation pass costs zero
-                # extra scans; only uniqueness still needs its own
-                # (grouped) aggregation.
-                obs_df, obs = observed_checks(df, m.checks, name=m.name)
-                path = f"{self.warehouse_dir}/{m.name}"
-                obs_df.write.mode("overwrite").parquet(path)
-                assert_observed(obs, context=f" in {m.name}")
-                df = self.spark.read.parquet(path)
-                df.createOrReplaceTempView(m.name)
-                if m.unique_keys:
-                    assert_checks(df, (), m.unique_keys)
-                self.built[m.name] = df
-                done.add(name)
-                return
-            elif m.materialization == "cached":
+            if m.materialization == "cached":
                 df = df.persist()
+            elif m.materialization == "table":
+                if not self.warehouse_dir:
+                    raise ValueError(f"table model {m.name} needs a warehouse_dir")
+                path = f"{self.warehouse_dir}/{m.name}"
+                df.write.mode("overwrite").parquet(path)
+                df = self.spark.read.parquet(path)
             df.createOrReplaceTempView(m.name)
-            # V7: a node's checks run before any dependent builds.
-            if m.checks or m.unique_keys:
-                assert_checks(df, m.checks, m.unique_keys)
+            assert_checks(df, m.checks, m.unique_keys, context=f" in {m.name}")
             self.built[m.name] = df
             done.add(name)
 

@@ -191,7 +191,6 @@ def features(metrics_df: DataFrame) -> DataFrame:
         ratios,
         ["delta_beta_ratio", "delta_alpha_ratio", "theta_alpha_ratio"],
         ENTITY,
-        order_by=ORDER,
     )
     return z.select(
         "epoch_id",

@@ -7,14 +7,17 @@ accepted_values / expression_is_true / accepted_range,
 ``models/schema.yml``), and fail-fast DAG gating (``pipeline.py:
 156-173``).  Here:
 
-- :func:`contract_violations` builds one violation predicate per rule;
+- :func:`contract_violation_condition` builds the row contract as one predicate;
 - :func:`validate_split` yields (valid, quarantine) frames — quarantine
   at *entity* granularity like the reference's whole-subject rejection;
 - :class:`Check` + :func:`run_checks` evaluate all declarative checks in
   a SINGLE aggregation pass (one scan, map-side combined — at 100 TB
   one pass instead of N is the difference that matters) and unpivot to
   (check_name, violations) rows;
-- :func:`assert_checks` is the fail-fast gate used by plans.runner.
+- :func:`assert_checks` is the one fail-fast gate: row checks plus
+  grouped uniqueness checks, collected in one action, raising
+  :class:`CheckFailure` naming the model.  plans.runner calls it on
+  every model after materializing it, whatever the materialization.
 """
 
 from __future__ import annotations
@@ -78,16 +81,6 @@ def run_checks(df: DataFrame, checks: Sequence[Check]) -> DataFrame:
         ]
     )
     return agg.unpivot([], [c.name for c in checks], "check_name", "violations")
-
-
-def unique_violations(df: DataFrame, cols: Sequence[str]) -> DataFrame:
-    """V3: keys occurring more than once (returns the duplicated keys)."""
-    return (
-        df.groupBy(*cols)
-        .agg(F.count("*").alias("n"))
-        .filter(F.col("n") > 1)
-        .select(*cols, F.col("n").alias("occurrences"))
-    )
 
 
 def uniqueness_check(df: DataFrame, cols: Sequence[str], name: str | None = None) -> DataFrame:
@@ -159,47 +152,19 @@ def assert_checks(
     df: DataFrame,
     checks: Sequence[Check],
     unique_cols: Sequence[Sequence[str]] = (),
+    context: str = "",
 ) -> None:
-    """V7: fail-fast gate — evaluate checks, raise on any violation."""
+    """V7: fail-fast gate — evaluate checks in one action, raise on any violation.
+
+    ``context`` (e.g. ``" in summary"``) names the gated model in the
+    error.  No checks and no keys → no job at all.
+    """
+    if not checks and not unique_cols:
+        return
     results = run_checks(df, checks)
     for keys in unique_cols:
         results = results.unionByName(uniqueness_check(df, keys))
     bad = results.filter(F.col("violations") > 0).collect()
     if bad:
         detail = ", ".join(f"{r['check_name']}={r['violations']}" for r in bad)
-        raise CheckFailure(f"data-quality checks failed: {detail}")
-
-
-def observed_checks(df: DataFrame, checks: Sequence[Check], name: str = "checks"):
-    """Attach all row-wise checks as an Observation on ``df``.
-
-    The 100 TB upgrade over :func:`run_checks`: the violation counters
-    ride the NEXT action on ``df`` (typically the materializing write)
-    via ``Dataset.observe`` — zero additional scans, where the
-    separate aggregation pass re-reads the stage once per gate.
-    Returns ``(observed_df, observation)``; after any action on the
-    returned frame, ``observation.get`` yields {check_name: count}.
-    Uniqueness checks cannot ride an Observation (they need a grouped
-    distinct, which ObserveExec's scan-local aggregates cannot
-    express) — keep those on :func:`uniqueness_check`.
-    """
-    from pyspark.sql import Observation
-
-    if not checks:
-        return df, None
-    obs = Observation(name)
-    metrics = [
-        F.sum(F.when(c.violation, 1).otherwise(0)).cast("bigint").alias(c.name)
-        for c in checks
-    ]
-    return df.observe(obs, *metrics), obs
-
-
-def assert_observed(observation, context: str = "") -> None:
-    """Fail-fast gate on an Observation populated by a completed action."""
-    if observation is None:
-        return
-    bad = {k: v for k, v in observation.get.items() if v and v > 0}
-    if bad:
-        detail = ", ".join(f"{k}={v}" for k, v in bad.items())
         raise CheckFailure(f"data-quality checks failed{context}: {detail}")

@@ -112,12 +112,3 @@ def surrogate_epoch_id(subject_col: str = "subject_id", idx_col: str = "epoch_id
             F.col(idx_col).cast("string"),
         )
     )
-
-
-def stage_decode_col(raw_col: str = "annotation"):
-    """Annotation-string → stage decode as a chained CASE (P5)."""
-    expr = None
-    for raw, stage in SLEEP_STAGE_MAP.items():
-        cond = F.col(raw_col) == F.lit(raw)
-        expr = F.when(cond, F.lit(stage)) if expr is None else expr.when(cond, F.lit(stage))
-    return expr.otherwise(F.lit("NAN"))

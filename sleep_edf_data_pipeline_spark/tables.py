@@ -17,12 +17,6 @@ from pyspark.sql import functions as F
 #: 0 files → repartition), vs. genuine bugs which should propagate.
 _SPREAD_EXPECTED_ERRORS = (Py4JError, AnalysisException, AttributeError)
 
-DEFAULT_SF_DIR = "/root/testdata/sf0.001"
-
-
-def sf_dir_from_env(default: str = DEFAULT_SF_DIR) -> str:
-    return os.environ.get("SPARK_GRAFT_SF_DIR", default)
-
 
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one synthetic test table (TESTDATA.md).

@@ -1,4 +1,4 @@
-"""Warehouse sinks (SURVEY §2.1 S5, S7, S9-S11).
+"""Warehouse sinks (SURVEY §2.1 S5, S7, S9, S10).
 
 The reference's transactional per-subject DELETE+INSERT
 (``warehouse/duckdb_client.py:100-111``) maps to Spark's dynamic
@@ -36,27 +36,19 @@ def write_epochs(
     ``df`` (dynamic partition overwrite — per-subject idempotent
     re-ingest); ``overwrite=False`` appends.
     """
-    spark = df.sparkSession
-    if overwrite:
-        prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            df.write.mode("overwrite").partitionBy(partition_col).parquet(path)
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-    else:
-        df.write.mode("append").partitionBy(partition_col).parquet(path)
+    # a per-write option, never the session conf: concurrent loads in
+    # one session cannot flip each other's overwrite mode
+    (
+        df.write.mode("overwrite" if overwrite else "append")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(partition_col)
+        .parquet(path)
+    )
 
 
 def read_epochs(spark: SparkSession, path: str) -> DataFrame:
     """S6: schema-preserving scan of the partitioned epoch table."""
     return spark.read.parquet(path)
-
-
-def truncate_epochs(spark: SparkSession, path: str) -> None:
-    """S11: drop all rows (overwrite with an empty frame, schema kept)."""
-    empty = spark.createDataFrame([], read_epochs(spark, path).schema)
-    empty.write.mode("overwrite").parquet(path)
 
 
 def error_row(

@@ -104,9 +104,17 @@ def test_runner_fail_fast_blocks_dependents(spark):
         ),
         Model("down_model", downstream, depends_on=["mid_model"]),
     ]
-    with pytest.raises(CheckFailure, match="impossible"):
+    with pytest.raises(CheckFailure, match="in mid_model: impossible"):
         ModelRunner(spark).run(models)
     assert built == ["staged", "mid"]  # downstream never built
+
+
+def test_runner_table_without_warehouse_raises(spark):
+    """A table model needs somewhere to land; it never degrades to a view."""
+    model = Model("unlanded_table", lambda s: s.range(3), materialization="table")
+    with pytest.raises(ValueError, match="warehouse_dir"):
+        ModelRunner(spark).run([model])
+    assert not spark.catalog.tableExists("unlanded_table")
 
 
 def test_runner_builds_full_dag(spark, tmp_path):

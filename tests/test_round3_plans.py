@@ -427,32 +427,7 @@ def test_ivfpq_no_cartesian_refine_broadcasts(spark, sf_dir):
     assert "BroadcastHashJoin" in plan, plan
 
 
-# --- observe-based validation ----------------------------------------------
-
-
-def test_observed_checks_ride_the_action(spark):
-    """Violation counters must come back from the SAME action (one
-    scan), and the table-materialization gate must fail fast on them."""
-    from pyspark.sql import Row
-
-    from sleep_edf_data_pipeline_spark.quality.validate import (
-        assert_observed,
-        CheckFailure,
-        not_null,
-        observed_checks,
-    )
-
-    df = spark.createDataFrame(
-        [Row(a=1, b="x"), Row(a=None, b="y"), Row(a=3, b=None)]
-    )
-    obs_df, obs = observed_checks(df, [not_null("a"), not_null("b")])
-    assert obs_df.count() == 3  # the only action
-    assert obs.get == {"not_null_a": 1, "not_null_b": 1}
-    try:
-        assert_observed(obs)
-        raise AssertionError("expected CheckFailure")
-    except CheckFailure as e:
-        assert "not_null_a=1" in str(e)
+# --- table-model gate ------------------------------------------------------
 
 
 def test_table_materialization_gates_via_observation(spark, tmp_path):

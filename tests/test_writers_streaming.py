@@ -57,6 +57,23 @@ def test_per_subject_overwrite_is_surgical(spark, epochs, tmp_path):
     assert after.filter("subject_id = 2").count() > 0
 
 
+def test_overwrite_leaves_session_conf_alone(epochs, tmp_path, monkeypatch):
+    """The dynamic overwrite is a per-write option: flipping the
+    session-wide partitionOverwriteMode would race concurrent loads."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    calls = []
+    real_set = RuntimeConfig.set
+
+    def spy(self, key, value):
+        calls.append(key)
+        return real_set(self, key, value)
+
+    monkeypatch.setattr(RuntimeConfig, "set", spy)
+    write_epochs(epochs, str(tmp_path / "epochs"), overwrite=True)
+    assert calls == []
+
+
 def test_append_mode_accumulates(spark, epochs, tmp_path):
     path = str(tmp_path / "epochs")
     one = epochs.filter("subject_id = 0")
