@@ -18,9 +18,28 @@ Scale notes:
 - signatures/bands are recomputed per side rather than cached —
   cheaper than materializing at PB scale; callers can persist the
   signature frame when reused.
+
+Banded near-dup search is a filter-verify pipeline (cheap candidates
+from an equi-join on hash keys, then an exact check of the candidates
+only), and each of its four stages is written once here:
+
+- :func:`_signed` — explode shingles, hash each once, and take the k
+  MinHash permutation mins (plus any per-doc extras) in one groupBy;
+- :func:`band_keys` — ``xxhash64`` of each signature slice: the one
+  band encoding, shared by the batch index and the streaming
+  admission (streaming/dedup.py);
+- :func:`_first_match_pairs` — self-join on (key index, key value),
+  emitting each pair only at its lowest matching index;
+- :func:`_verified` — join both sides' hash sets onto the candidates
+  and keep pairs whose exact Jaccard reaches the threshold.
+
+``with_minhash``, ``minhash_lsh_dedup``, ``incremental_minhash_dedup``,
+``simhash_near_dups`` and ``ngram_jaccard_join`` compose them.
 """
 
 from __future__ import annotations
+
+from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -66,6 +85,144 @@ def exact_dedup(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
+def _signed(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    k: int,
+    shingle_n: int,
+    *extra_aggs: Column,
+) -> DataFrame:
+    """Per-doc MinHash mins ``_m0.._m{k-1}`` from one groupBy.
+
+    One md5 per *shingle* (not per shingle×seed): explode shingles,
+    base-hash each once (``_h``) in whole-stage codegen, then derive
+    the k "permutations" with the universal-hash family ``(a_j·h +
+    b_j) mod p`` and take k ``min`` aggregates in a single
+    map-side-combining groupBy.  At 100 TB this shuffles only (id, k×8
+    bytes) partials — document text never crosses the wire — and
+    avoids the interpreted higher-order-function path entirely (a
+    naive per-seed seeded-md5 ``transform`` formulation measured 159×
+    slower than the DuckDB oracle at sf0.1; this one is at parity).
+
+    ``extra_aggs`` ride the same groupBy and may read ``_h`` (e.g. the
+    distinct-shingle-hash set the verify stage needs, so text is
+    hashed once and never re-shingled).  Every column of ``df`` other
+    than the id and the text comes along as its ``first`` value.
+    """
+    rest = [c for c in df.columns if c not in (id_col, text_col)]
+    sh = df.select(
+        F.col(id_col),
+        *rest,
+        F.explode(word_shingles(tokens(F.col(text_col)), shingle_n)).alias("_s"),
+    ).withColumn("_h", hash64(F.col("_s")))
+    return sh.groupBy(id_col).agg(
+        *[
+            F.min(perm_hash(F.col("_h"), a, b)).alias(f"_m{j}")
+            for j, (a, b) in enumerate(perm_coeffs(k))
+        ],
+        *extra_aggs,
+        *[F.first(c).alias(c) for c in rest],
+    )
+
+
+def band_keys(sig: Sequence[Column], bands: int, rows_per_band: int) -> list[Column]:
+    """LSH band keys: ``xxhash64`` of each ``rows_per_band``-wide slice of ``sig``.
+
+    The one band encoding: the batch LSH operators self-join on these
+    keys and the streaming admission probes a batch-signed index with
+    them, so equal signature slices get equal keys on every path by
+    construction.  Band hashes are internal — only slice *equality*
+    matters — so the engine-specific xxhash64 is safe here.
+    """
+    return [
+        F.xxhash64(*sig[b * rows_per_band : (b + 1) * rows_per_band])
+        for b in range(bands)
+    ]
+
+
+def _first_match_pairs(
+    df: DataFrame,
+    id_col: str,
+    keys: Sequence[Column],
+    carry: Sequence[str],
+    keep: Column,
+) -> DataFrame:
+    """Candidate pairs from a self-join on (key index, key value).
+
+    Two rows pair when they agree on any of ``keys`` (LSH bands,
+    SimHash chunks).  A pair is emitted ONLY from the lowest key index
+    where they agree (at every earlier index the keys must differ), so
+    candidate pairs are unique by construction and no distinct shuffle
+    runs over the exploded pair set.
+
+    ``carry`` columns come out per side as ``<c>_a`` / ``<c>_b``;
+    ``keep`` is the pair predicate over ``id_a``, ``id_b`` and those.
+    Returns (id_a, id_b, carried columns).
+    """
+    long = df.select(F.col(id_col), *carry, F.array(*keys).alias("_keys")).select(
+        F.col(id_col), *carry, "_keys", F.posexplode("_keys").alias("_ki", "_kv")
+    )
+
+    def side(s: str) -> DataFrame:
+        return long.select(
+            F.col(id_col).alias(f"id_{s}"),
+            *[F.col(c).alias(f"{c}_{s}") for c in carry],
+            F.col("_keys").alias(f"_k{s}"),
+            "_ki",
+            "_kv",
+        )
+
+    cond = keep
+    for j in range(len(keys) - 1):
+        cond = cond & (
+            (F.col("_ki") <= j)
+            | (F.element_at("_ka", j + 1) != F.element_at("_kb", j + 1))
+        )
+    return (
+        side("a")
+        .join(side("b"), ["_ki", "_kv"])
+        .filter(cond)
+        .select("id_a", "id_b", *[f"{c}_{s}" for s in "ab" for c in carry])
+    )
+
+
+def _verified(
+    pairs: DataFrame,
+    sets: DataFrame,
+    id_col: str,
+    set_col: str,
+    threshold: float,
+) -> DataFrame:
+    """Exact-Jaccard verify of (id_a, id_b) candidates on per-doc hash sets.
+
+    Only the candidate pairs pull their two sets; Jaccard is
+    ``|A∩B| / (|A|+|B|-|A∩B|)`` rounded to 6 places — no union array
+    is materialized, and intersecting fixed-width hashes beats
+    intersecting strings.  Returns (id_a, id_b, jaccard ≥ threshold).
+    """
+
+    def side(s: str) -> DataFrame:
+        return sets.select(
+            F.col(id_col).alias(f"id_{s}"),
+            F.col(set_col).alias(f"set_{s}"),
+            F.size(set_col).alias(f"n_{s}"),
+        )
+
+    inter = F.size(F.array_intersect(F.col("set_a"), F.col("set_b"))).cast("double")
+    union = (F.col("n_a") + F.col("n_b")).cast("double") - inter
+    return (
+        pairs.join(side("a"), "id_a")
+        .join(side("b"), "id_b")
+        .withColumn(
+            "jaccard",
+            F.round(F.when(union > 0, inter / union).otherwise(F.lit(0.0)), 6),
+        )
+        .filter(F.col("jaccard") >= threshold)
+        .select("id_a", "id_b", "jaccard")
+    )
+
+
 def with_minhash(
     df: DataFrame,
     id_col: str,
@@ -73,39 +230,12 @@ def with_minhash(
     k: int = 16,
     shingle_n: int = 3,
 ) -> DataFrame:
-    """MinHash signatures: (id, sig array<bigint> length k).
-
-    One md5 per *shingle* (not per shingle×seed): explode shingles,
-    base-hash each once in whole-stage codegen, then derive the k
-    "permutations" with the universal-hash family ``(a_j·h + b_j) mod
-    p`` and take k ``min`` aggregates in a single map-side-combining
-    groupBy.  At 100 TB this shuffles only (id, k×8 bytes) partials —
-    document text never crosses the wire — and avoids the interpreted
-    higher-order-function path entirely (a naive per-seed seeded-md5
-    ``transform`` formulation measured 159× slower than the DuckDB
-    oracle at sf0.1; this one is at parity).
-    """
-    sh = df.select(
-        F.col(id_col),
-        F.explode(word_shingles(tokens(F.col(text_col)), shingle_n)).alias("_s"),
-    ).withColumn("_h", hash64(F.col("_s")))
-    mins = sh.groupBy(id_col).agg(
-        *[
-            F.min(perm_hash(F.col("_h"), a, b)).alias(f"_m{j}")
-            for j, (a, b) in enumerate(perm_coeffs(k))
-        ]
-    )
+    """MinHash signatures: (id, sig array<bigint> length k); see :func:`_signed`."""
+    mins = _signed(df.select(id_col, text_col), id_col, text_col, k, shingle_n)
     return mins.select(
         F.col(id_col),
         F.array(*[F.col(f"_m{j}") for j in range(k)]).alias("sig"),
     )
-
-
-def jaccard(a: Column, b: Column) -> Column:
-    """Exact Jaccard similarity of two array columns (as sets)."""
-    inter = F.size(F.array_intersect(a, b)).cast("double")
-    union = F.size(F.array_union(a, b)).cast("double")
-    return F.when(union > 0, inter / union).otherwise(F.lit(0.0))
 
 
 def minhash_lsh_dedup(
@@ -135,107 +265,22 @@ def minhash_lsh_dedup(
     what the composition throws away).
 
     One pass over the exploded shingles computes BOTH the k minhash
-    mins and the distinct-shingle-hash set (``collect_set``) in a
-    single map-side-combining groupBy — document text is hashed once
-    and never re-shingled for verification.  Candidate generation runs
-    on a slim (id, band_key) frame (band key = ``xxhash64`` of the raw
-    signature slice — band hashes are internal, only slice *equality*
-    matters); the per-doc hash sets join back only onto the distinct
-    candidate pairs.  Jaccard is verified on bigint sets with
-    ``|A∪B| = |A|+|B|-|A∩B|`` — no union array is materialized, and
-    intersecting fixed-width ints beats intersecting strings.  The
+    mins and the distinct-shingle-hash set (``collect_set``); candidate
+    generation runs on a slim (id, band keys) frame, and the per-doc
+    hash sets join back only onto the distinct candidate pairs.  The
     signature frame is persisted: it is read three times (two band
     sides, set join) and is tiny relative to the corpus (k×8B + the
     distinct token hashes per doc).
     """
-    sh = df.select(
-        F.col(id_col),
-        F.explode(word_shingles(tokens(F.col(text_col)), shingle_n)).alias("_s"),
-    ).withColumn("_h", hash64(F.col("_s")))
-    min_cols = [
-        F.min(perm_hash(F.col("_h"), a, b)).alias(f"_m{j}")
-        for j, (a, b) in enumerate(perm_coeffs(k))
-    ]
-    set_cols = [] if candidates_only else [F.collect_set("_h").alias("_hset")]
-    agg = sh.groupBy(id_col).agg(*min_cols, *set_cols).persist()
-
-    keys = F.array(
-        *[
-            F.xxhash64(
-                *[F.col(f"_m{b * rows_per_band + r}") for r in range(rows_per_band)]
-            )
-            for b in range(bands)
-        ]
-    )
-    long = agg.select(
-        F.col(id_col),
-        keys.alias("_keys"),
-    ).select(
-        F.col(id_col),
-        "_keys",
-        F.posexplode("_keys").alias("band_idx", "band_key"),
-    )
-    # First-matching-band dedup: a pair is emitted ONLY from the lowest
-    # band index where the two signatures agree (for every earlier band
-    # the keys must differ) — candidate pairs are unique by
-    # construction, so no distinct shuffle over the exploded pair set.
-    first_match = None
-    for j in range(bands - 1):
-        cond = (F.col("band_idx") <= j) | (
-            F.element_at("_ka", j + 1) != F.element_at("_kb", j + 1)
-        )
-        first_match = cond if first_match is None else first_match & cond
-    cands = (
-        long.select(
-            F.col(id_col).alias("id_a"),
-            F.col("_keys").alias("_ka"),
-            "band_idx",
-            "band_key",
-        )
-        .join(
-            long.select(
-                F.col(id_col).alias("id_b"),
-                F.col("_keys").alias("_kb"),
-                "band_idx",
-                "band_key",
-            ),
-            ["band_idx", "band_key"],
-        )
-        .filter((F.col("id_a") < F.col("id_b")) & first_match)
-        .select("id_a", "id_b")
-    )
+    set_aggs = [] if candidates_only else [F.collect_set("_h").alias("_hset")]
+    agg = _signed(
+        df.select(id_col, text_col), id_col, text_col, k, shingle_n, *set_aggs
+    ).persist()
+    keys = band_keys([F.col(f"_m{j}") for j in range(k)], bands, rows_per_band)
+    cands = _first_match_pairs(agg, id_col, keys, [], F.col("id_a") < F.col("id_b"))
     if candidates_only:
         return cands
-
-    sets = agg.select(
-        F.col(id_col), F.col("_hset"), F.size("_hset").alias("_n")
-    )
-    inter = F.size(F.array_intersect(F.col("set_a"), F.col("set_b"))).cast("double")
-    union = (F.col("n_a") + F.col("n_b")).cast("double") - inter
-    return (
-        cands.join(
-            sets.select(
-                F.col(id_col).alias("id_a"),
-                F.col("_hset").alias("set_a"),
-                F.col("_n").alias("n_a"),
-            ),
-            "id_a",
-        )
-        .join(
-            sets.select(
-                F.col(id_col).alias("id_b"),
-                F.col("_hset").alias("set_b"),
-                F.col("_n").alias("n_b"),
-            ),
-            "id_b",
-        )
-        .withColumn(
-            "jaccard",
-            F.round(F.when(union > 0, inter / union).otherwise(F.lit(0.0)), 6),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
+    return _verified(cands, agg, id_col, "_hset", threshold)
 
 
 def ngram_jaccard_join(
@@ -350,32 +395,7 @@ def ngram_jaccard_join(
         .filter(F.col("_ub") >= F.col("_need"))
         .select("id_a", "id_b")
     )
-    inter = F.size(F.array_intersect(F.col("set_a"), F.col("set_b"))).cast("double")
-    union = (F.col("n_a") + F.col("n_b")).cast("double") - inter
-    return (
-        cands.join(
-            sets.select(
-                F.col(id_col).alias("id_a"),
-                F.col("hset").alias("set_a"),
-                F.col("_n").alias("n_a"),
-            ),
-            "id_a",
-        )
-        .join(
-            sets.select(
-                F.col(id_col).alias("id_b"),
-                F.col("hset").alias("set_b"),
-                F.col("_n").alias("n_b"),
-            ),
-            "id_b",
-        )
-        .withColumn(
-            "jaccard",
-            F.round(F.when(union > 0, inter / union).otherwise(F.lit(0.0)), 6),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
+    return _verified(cands, sets, id_col, "hset", threshold)
 
 
 def simhash_fingerprint(
@@ -443,53 +463,17 @@ def simhash_near_dups(
     fingerprints = fingerprints.persist()
     width = bits // chunks
     mask = (1 << width) - 1
-    chunk_cols = [
-        (
-            F.shiftright(F.col("simhash"), c * width).bitwiseAND(F.lit(mask))
-        ).alias(f"_c{c}")
+    chunk_keys = [
+        F.shiftright(F.col("simhash"), c * width).bitwiseAND(F.lit(mask))
         for c in range(chunks)
     ]
-    chunked = fingerprints.select(id_col, "simhash", *chunk_cols)
-    long = chunked.select(
-        id_col,
-        "simhash",
-        F.array(*[F.col(f"_c{c}") for c in range(chunks)]).alias("_chunks"),
-    ).select(
-        id_col,
-        "simhash",
-        "_chunks",
-        F.posexplode("_chunks").alias("chunk_idx", "chunk_val"),
-    )
-    a = long.select(
-        F.col(id_col).alias("id_a"),
-        F.col("simhash").alias("sim_a"),
-        F.col("_chunks").alias("_ca"),
-        "chunk_idx",
-        "chunk_val",
-    )
-    b = long.select(
-        F.col(id_col).alias("id_b"),
-        F.col("simhash").alias("sim_b"),
-        F.col("_chunks").alias("_cb"),
-        "chunk_idx",
-        "chunk_val",
-    )
-    # First-matching-chunk dedup: emit a pair only from the lowest chunk
-    # index where the fingerprints agree — pairs are unique by
-    # construction and the distinct shuffle over the exploded pair set
-    # disappears (same trick as the LSH band join).
-    first_match = None
-    for j in range(chunks - 1):
-        cond = (F.col("chunk_idx") <= j) | (
-            F.element_at("_ca", j + 1) != F.element_at("_cb", j + 1)
-        )
-        first_match = cond if first_match is None else first_match & cond
     return (
-        a.join(b, ["chunk_idx", "chunk_val"])
-        .filter((F.col("id_a") < F.col("id_b")) & first_match)
+        _first_match_pairs(
+            fingerprints, id_col, chunk_keys, ["simhash"], F.col("id_a") < F.col("id_b")
+        )
         .withColumn(
             "hamming",
-            F.bit_count(F.col("sim_a").bitwiseXOR(F.col("sim_b"))).cast("int"),
+            F.bit_count(F.col("simhash_a").bitwiseXOR(F.col("simhash_b"))).cast("int"),
         )
         .filter(F.col("hamming") <= max_hamming)
         .select("id_a", "id_b", "hamming")
@@ -531,91 +515,21 @@ def incremental_minhash_dedup(
     ).unionByName(
         batch_df.select(F.col(id_col), F.col(text_col), F.lit(1).alias("_src"))
     )
-    sh = union.select(
-        F.col(id_col),
-        F.col("_src"),
-        F.explode(word_shingles(tokens(F.col(text_col)), shingle_n)).alias("_s"),
-    ).withColumn("_h", hash64(F.col("_s")))
-    agg = sh.groupBy(id_col).agg(
-        *[
-            F.min(perm_hash(F.col("_h"), a, b)).alias(f"_m{j}")
-            for j, (a, b) in enumerate(perm_coeffs(k))
-        ],
-        F.collect_set("_h").alias("_hset"),
-        F.first("_src").alias("_src"),
+    agg = _signed(
+        union, id_col, text_col, k, shingle_n, F.collect_set("_h").alias("_hset")
     ).persist()
-
-    keys = F.array(
-        *[
-            F.xxhash64(
-                *[F.col(f"_m{b * rows_per_band + r}") for r in range(rows_per_band)]
-            )
-            for b in range(bands)
-        ]
-    )
-    long = agg.select(F.col(id_col), F.col("_src"), keys.alias("_keys")).select(
-        F.col(id_col),
-        "_src",
-        "_keys",
-        F.posexplode("_keys").alias("band_idx", "band_key"),
-    )
-    first_match = None
-    for j in range(bands - 1):
-        cond = (F.col("band_idx") <= j) | (
-            F.element_at("_ka", j + 1) != F.element_at("_kb", j + 1)
+    keys = band_keys([F.col(f"_m{j}") for j in range(k)], bands, rows_per_band)
+    admissible = (
+        (F.col("id_a") != F.col("id_b"))
+        & (F.col("_src_b") == 1)
+        & (
+            (F.col("_src_a") == 0)
+            | ((F.col("_src_a") == 1) & (F.col("id_a") < F.col("id_b")))
         )
-        first_match = cond if first_match is None else first_match & cond
-    admissible = (F.col("src_b") == 1) & (
-        (F.col("src_a") == 0)
-        | ((F.col("src_a") == 1) & (F.col("id_a") < F.col("id_b")))
     )
-    cands = (
-        long.select(
-            F.col(id_col).alias("id_a"),
-            F.col("_src").alias("src_a"),
-            F.col("_keys").alias("_ka"),
-            "band_idx",
-            "band_key",
-        )
-        .join(
-            long.select(
-                F.col(id_col).alias("id_b"),
-                F.col("_src").alias("src_b"),
-                F.col("_keys").alias("_kb"),
-                "band_idx",
-                "band_key",
-            ),
-            ["band_idx", "band_key"],
-        )
-        .filter((F.col("id_a") != F.col("id_b")) & admissible & first_match)
-        .select("id_a", "id_b")
-    )
-
-    sets = agg.select(F.col(id_col), F.col("_hset"), F.size("_hset").alias("_n"))
-    inter = F.size(F.array_intersect(F.col("set_a"), F.col("set_b"))).cast("double")
-    union_n = (F.col("n_a") + F.col("n_b")).cast("double") - inter
+    cands = _first_match_pairs(agg, id_col, keys, ["_src"], admissible)
     matches = (
-        cands.join(
-            sets.select(
-                F.col(id_col).alias("id_a"),
-                F.col("_hset").alias("set_a"),
-                F.col("_n").alias("n_a"),
-            ),
-            "id_a",
-        )
-        .join(
-            sets.select(
-                F.col(id_col).alias("id_b"),
-                F.col("_hset").alias("set_b"),
-                F.col("_n").alias("n_b"),
-            ),
-            "id_b",
-        )
-        .withColumn(
-            "_j",
-            F.round(F.when(union_n > 0, inter / union_n).otherwise(F.lit(0.0)), 6),
-        )
-        .filter(F.col("_j") >= threshold)
+        _verified(cands, agg, id_col, "_hset", threshold)
         .groupBy("id_b")
         .agg(F.min("id_a").alias("dup_of"))
     )

@@ -111,10 +111,14 @@ def read_edf_epochs(
     """Scan a directory of ``*.edf`` and extract epoch rows distributedly.
 
     ``binaryFile`` gives (path, content) rows; ``mapInPandas`` runs the
-    parser once per file partition.  The stage_provider must be a
+    parser once per file partition.  Only ``*.edf`` names are read, as
+    in ``EdfDataSource``: a stray file in the directory is skipped,
+    not parsed (and failed on).  The stage_provider must be a
     picklable top-level callable (it ships to executors).
     """
-    files = spark.read.format("binaryFile").load(path)
+    files = (
+        spark.read.format("binaryFile").option("pathGlobFilter", "*.edf").load(path)
+    )
 
     def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

@@ -26,6 +26,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.hashing import hash64, perm_coeffs, perm_hash
+from ..operators.dedup import band_keys, tokens
+
 
 def with_content_hash(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Stable content key: md5 of the raw text (same as batch dedup)."""
@@ -70,26 +73,20 @@ def rowwise_minhash_bands(
     a stream wants the opposite shape: each arriving doc computes its
     own signature inside the projection (higher-order ``transform`` +
     ``array_min`` per permutation), so signing needs no shuffle and no
-    state.  Same hash family and band layout as the batch path —
-    identical band keys for identical text, by construction.
+    state.  Same hash family as the batch path, and the keys come from
+    operators/dedup.py: band_keys, the band encoding the batch index
+    uses — identical band keys for identical text, by construction.
 
-    Adds ``band_0..band_{bands-1}`` (xxhash64 of each signature slice).
+    Adds ``band_0..band_{bands-1}``.
     """
-    from ..functions.hashing import hash64, perm_coeffs, perm_hash
-    from ..operators.dedup import tokens
-
     hs = F.transform(tokens(F.col(text_col)), lambda t: hash64(t))
     sig = [
         F.array_min(F.transform(hs, lambda h: perm_hash(h, a, b)))
         for a, b in perm_coeffs(k)
     ]
-    bands = k // rows_per_band
     out = df
-    for b in range(bands):
-        out = out.withColumn(
-            f"band_{b}",
-            F.xxhash64(*sig[b * rows_per_band : (b + 1) * rows_per_band]),
-        )
+    for b, key in enumerate(band_keys(sig, k // rows_per_band, rows_per_band)):
+        out = out.withColumn(f"band_{b}", key)
     return out
 
 
@@ -119,26 +116,21 @@ def streaming_lsh_admission(
     the batch signer's output (``with_minhash``): (id, sig).
     """
     bands = k // rows_per_band
-    signed = rowwise_minhash_bands(docs, text_col, k, rows_per_band)
-    out = signed
-    for b in range(bands):
+    idx_keys = band_keys(
+        [F.element_at("sig", j + 1) for j in range(bands * rows_per_band)],
+        bands,
+        rows_per_band,
+    )
+    out = rowwise_minhash_bands(docs, text_col, k, rows_per_band)
+    admitted = F.lit(True)
+    for b, key in enumerate(idx_keys):
         idx_b = (
-            index_signed.select(
-                F.xxhash64(
-                    *[
-                        F.element_at("sig", b * rows_per_band + r + 1)
-                        for r in range(rows_per_band)
-                    ]
-                ).alias(f"band_{b}")
-            )
+            index_signed.select(key.alias(f"band_{b}"))
             .distinct()
             .withColumn(f"_hit_{b}", F.lit(1))
         )
         out = out.join(F.broadcast(idx_b), f"band_{b}", "left")
-    admitted = None
-    for b in range(bands):
-        c = F.col(f"_hit_{b}").isNull()
-        admitted = c if admitted is None else (admitted & c)
+        admitted = admitted & F.col(f"_hit_{b}").isNull()
     return out.withColumn("admitted", admitted).drop(
         *[f"_hit_{b}" for b in range(bands)]
     )

@@ -37,10 +37,6 @@ from typing import Any
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.streaming.stateful_processor import (
-    StatefulProcessor,
-    StatefulProcessorHandle,
-)
 
 #: Emitted for every CLOSED episode.
 EPISODE_SCHEMA = (
@@ -59,11 +55,10 @@ def _fold_episodes(
     prior: tuple | None,
     gap_us: int,
 ) -> tuple[list[tuple], tuple]:
-    """Shared episode fold: (closed rows, new open-episode state).
+    """Fold one user's batches onto the open episode.
 
-    One implementation drives BOTH stateful APIs
-    (``applyInPandasWithState`` and ``transformWithStateInPandas``) so
-    their outputs are equal by construction, not by parallel upkeep.
+    Returns (closed rows, new open-episode state); ``prior`` is the
+    state carried from earlier micro-batches (None for a new user).
     """
     if prior is not None:
         start_us, last_us, n_events, total_value = prior
@@ -143,59 +138,3 @@ def _parse_gap_us(gap: str) -> int:
     per_unit = {"seconds": 1, "second": 1, "minutes": 60, "minute": 60,
                 "hours": 3600, "hour": 3600}[unit]
     return int(amount) * per_unit * 1_000_000
-
-
-class _EpisodeProcessor(StatefulProcessor):
-    """``transformWithState`` port of the episode fold (Spark 4 API).
-
-    Same semantics as ``streaming_episodes`` via the shared
-    ``_fold_episodes``; the open episode lives in a named ValueState
-    (RocksDB-backed, off-heap at scale) instead of the legacy
-    ``GroupState`` blob.  The v2 API additionally offers timers and
-    TTL — the natural home for "close an episode after N idle minutes
-    of wall clock" semantics a follow-up could add.
-    """
-
-    def __init__(self, gap_us: int) -> None:
-        self._gap_us = gap_us
-
-    def init(self, handle: StatefulProcessorHandle) -> None:
-        self._open = handle.getValueState("open_episode", STATE_SCHEMA)
-
-    def handleInputRows(
-        self,
-        key: tuple[Any, ...],
-        rows: Iterator[pd.DataFrame],
-        timerValues: Any,
-    ) -> Iterator[pd.DataFrame]:
-        (user_id,) = key
-        prior = self._open.get() if self._open.exists() else None
-        closed, new_state = _fold_episodes(user_id, rows, prior, self._gap_us)
-        self._open.update(new_state)
-        if closed:
-            yield _closed_to_pdf(closed)
-
-    def close(self) -> None:
-        pass
-
-
-def streaming_episodes_tws(
-    events: DataFrame, gap: str = "30 minutes"
-) -> DataFrame:
-    """``streaming_episodes`` on the transformWithStateInPandas API.
-
-    Requires the RocksDB state store provider
-    (``spark.sql.streaming.stateStore.providerClass`` →
-    ``RocksDBStateStoreProvider``) — the provider a large cluster runs
-    anyway, since HDFS-backed state heaps out long before 10^9 keys.
-    """
-    return (
-        events.select("user_id", "ts", "value")
-        .groupBy("user_id")
-        .transformWithStateInPandas(
-            statefulProcessor=_EpisodeProcessor(_parse_gap_us(gap)),
-            outputStructType=EPISODE_SCHEMA,
-            outputMode="append",
-            timeMode="none",
-        )
-    )

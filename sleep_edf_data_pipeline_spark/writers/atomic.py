@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..schema import ERROR_SCHEMA
+from .versioned import merge_upsert
 
 
 def write_epochs(
@@ -113,33 +114,14 @@ def foreach_batch_upsert(path: str, keys: list[str]):
     Returns a ``foreachBatch`` callback implementing last-write-wins on
     ``keys``: rows already present whose key reappears in the batch are
     replaced.  This is the incremental-materialization pattern (the
-    streaming analog of S7's per-subject overwrite): read current state,
-    anti-join out superseded rows, union the batch, write to a temp dir,
-    swap.  The swap is only rename-atomic on a local/HDFS-like
-    filesystem — the production target is Delta/Iceberg ``MERGE INTO``,
-    which makes the same callback a one-liner and adds snapshot
-    isolation; the batch-side plan (anti-join + union) is identical.
-
-    The anti-join broadcasts the batch's key set when small — the common
-    case, since a micro-batch is bounded by the trigger interval while
-    the table grows without bound.
+    streaming analog of S7's per-subject overwrite), and each batch is
+    one :func:`.versioned.merge_upsert` — anti-join out superseded rows,
+    union the batch, commit a new snapshot through the versioned
+    table's compare-and-swap log.  A crash mid-batch leaves the last
+    committed snapshot readable; read the table with ``read_versioned``.
     """
-    import os
-    import shutil
 
     def _upsert(batch: DataFrame, _batch_id: int) -> None:
-        spark = batch.sparkSession
-        if os.path.exists(path):
-            existing = spark.read.parquet(path)
-            merged = existing.join(
-                F.broadcast(batch.select(*keys).distinct()), keys, "left_anti"
-            ).unionByName(batch)
-        else:
-            merged = batch
-        tmp = f"{path}.__tmp__"
-        merged.write.mode("overwrite").parquet(tmp)
-        if os.path.exists(path):
-            shutil.rmtree(path)
-        os.rename(tmp, path)
+        merge_upsert(batch.sparkSession, path, batch, keys)
 
     return _upsert

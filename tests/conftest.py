@@ -12,25 +12,6 @@ sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 # joins at sf0.1) would just slow startup via heap pre-touch.
 os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "6g")
 
-# google.protobuf compatibility shim (VERDICT r10 item 5): the
-# transformWithStateInPandas path needs a protobuf runtime in BOTH the
-# test process and the Python workers Spark spawns.  PYTHONPATH must be
-# extended BEFORE the JVM launches so worker interpreters import the
-# shim's sitecustomize at startup; see tests/_vendor/pbshim/pb_compat.py.
-_PBSHIM = str(Path(__file__).resolve().parent / "_vendor" / "pbshim")
-_PBSHIM_ACTIVE = False
-try:
-    import google.protobuf  # noqa: F401
-except ImportError:
-    sys.path.insert(0, _PBSHIM)
-    import pb_compat
-
-    if pb_compat.install():
-        _PBSHIM_ACTIVE = True
-        os.environ["PYTHONPATH"] = os.pathsep.join(
-            [_PBSHIM] + ([os.environ["PYTHONPATH"]] if os.environ.get("PYTHONPATH") else [])
-        )
-
 from sleep_edf_data_pipeline_spark.session import get_spark  # noqa: E402
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -39,18 +20,7 @@ SF_DIR_MID = "/root/testdata/sf0.01"
 
 @pytest.fixture(scope="session")
 def spark():
-    # Spark REBUILDS worker PYTHONPATH from the function's envVars
-    # (sc.environment ← spark.executorEnv.*), discarding the inherited
-    # process value — so the pbshim dir must also ride executorEnv for
-    # the transformWithState driver worker to find the protobuf shim.
-    extra = {"spark.executorEnv.PYTHONPATH": _PBSHIM} if _PBSHIM_ACTIVE else None
-    s = get_spark(
-        app_name="engine-tests",
-        master="local[4]",
-        shuffle_partitions=4,
-        extra=extra,
-    )
-    yield s
+    yield get_spark(app_name="engine-tests", master="local[4]", shuffle_partitions=4)
 
 
 @pytest.fixture(scope="session")

@@ -189,3 +189,26 @@ def test_cross_split_leakage_is_lsh_pairs_restricted(spark, sf_dir):
         assert r["split_b"] == split_of(r["id_b"])
         audited[(r["id_a"], r["id_b"])] = r["jaccard"]
     assert audited == expected
+
+
+def test_incremental_admission_matches_full_corpus_dedup(spark, sf_dir):
+    """Against an empty index, incremental admission is the full-corpus
+    dedup: it rejects exactly the ``id_b`` side of every verified
+    MinHash-LSH pair, and each ``dup_of`` is that doc's smallest
+    matching ``id_a``."""
+    from sleep_edf_data_pipeline_spark.operators.dedup import (
+        incremental_minhash_dedup,
+        minhash_lsh_dedup,
+    )
+    from sleep_edf_data_pipeline_spark.tables import table
+
+    docs = table(spark, sf_dir, "documents").select("doc_id", "text")
+    expected: dict[int, int] = {}
+    for r in minhash_lsh_dedup(docs, "doc_id", "text").collect():
+        expected[r["id_b"]] = min(r["id_a"], expected.get(r["id_b"], r["id_a"]))
+    assert expected, "corpus has no near-dups: the check would be vacuous"
+
+    rows = incremental_minhash_dedup(docs.limit(0), docs, "doc_id", "text").collect()
+    assert len(rows) == docs.count()
+    assert {r["doc_id"]: r["dup_of"] for r in rows if not r["keep"]} == expected
+    assert all(r["dup_of"] is None for r in rows if r["keep"])

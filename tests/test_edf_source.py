@@ -91,6 +91,19 @@ def test_distributed_edf_scan(spark, tmp_path):
     assert all(np.isfinite(r["delta_power"]) for r in rows)
 
 
+def test_edf_scan_skips_non_edf_files(spark, tmp_path):
+    """A stray non-EDF file next to the recordings is not parsed: the
+    load reads only ``*.edf`` names instead of failing on the stray."""
+    d = tmp_path / "edf"
+    d.mkdir()
+    for sid in (1, 2):
+        (d / f"subject_{sid}.edf").write_bytes(_synthetic_edf(3))
+    (d / "notes.txt").write_text("scored by hand, see the lab sheet\n")
+    rows = read_edf_epochs(spark, str(d), cyclic_demo_stages).collect()
+    assert len(rows) == 6
+    assert {r["subject_id"] for r in rows} == {1, 2}
+
+
 def test_edf_python_datasource(spark, tmp_path):
     """spark.read.format('edf'): one InputPartition per file, Arrow rows."""
     from sleep_edf_data_pipeline_spark.sources.edf_datasource import EdfDataSource

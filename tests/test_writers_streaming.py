@@ -300,6 +300,7 @@ def test_foreach_batch_upsert_last_write_wins(spark, tmp_path):
     import time
 
     from sleep_edf_data_pipeline_spark.writers.atomic import foreach_batch_upsert
+    from sleep_edf_data_pipeline_spark.writers.versioned import read_versioned
 
     src = tmp_path / "upsert_src"
     src.mkdir()
@@ -324,8 +325,34 @@ def test_foreach_batch_upsert_last_write_wins(spark, tmp_path):
     )
     q.awaitTermination(120)
 
-    final = {r["k"]: r["v"] for r in spark.read.parquet(tgt).collect()}
+    final = {r["k"]: r["v"] for r in read_versioned(spark, tgt).collect()}
     assert final == {1: "new", 2: "keep", 3: "add"}
+
+
+def test_foreach_batch_upsert_crash_keeps_last_batch(spark, tmp_path, monkeypatch):
+    """A batch that dies before its commit leaves the previous batch's
+    rows readable: the table is never removed ahead of the swap."""
+    import os
+
+    from sleep_edf_data_pipeline_spark.writers.atomic import foreach_batch_upsert
+    from sleep_edf_data_pipeline_spark.writers.versioned import read_versioned
+
+    tgt = str(tmp_path / "upsert_tgt")
+    upsert = foreach_batch_upsert(tgt, ["k"])
+    schema = "k int, v string"
+    upsert(spark.createDataFrame([(1, "old"), (2, "keep")], schema), 0)
+
+    def crash(*_args, **_kwargs):
+        raise OSError("simulated crash at the commit point")
+
+    monkeypatch.setattr(os, "rename", crash)
+    monkeypatch.setattr(os, "link", crash)
+    with pytest.raises(OSError, match="simulated crash"):
+        upsert(spark.createDataFrame([(1, "new"), (3, "add")], schema), 1)
+    monkeypatch.undo()
+
+    final = {r["k"]: r["v"] for r in read_versioned(spark, tgt).collect()}
+    assert final == {1: "old", 2: "keep"}
 
 
 def test_failed_overwrite_leaves_table_intact_then_retry(spark, epochs, tmp_path):
@@ -528,97 +555,6 @@ def test_streaming_dedup_within_watermark_runs(spark, tmp_path):
         r["text"] for r in spark.sql("SELECT text FROM wm_dedup_stream").collect()
     )
     assert texts == ["alpha", "beta"]
-
-
-def test_streaming_episodes_transform_with_state(spark, tmp_path):
-    """transformWithStateInPandas twin emits the same closed episodes.
-
-    Same two-micro-batch scenario as the applyInPandasWithState test:
-    the open episode must survive the batch boundary inside a named
-    ValueState (RocksDB provider — required by the v2 API).
-
-    The v2 API's Python driver worker speaks protobuf to the JVM.
-    This container ships no protobuf distribution, so conftest.py
-    installs the tests/_vendor/pbshim compatibility shim (the Cloud
-    SDK's vendored pure-Python runtime + a runtime_version stand-in)
-    into the test process AND — via PYTHONPATH/sitecustomize — into
-    the Python workers Spark spawns; the importorskip below is the
-    honest fallback for environments where neither a real runtime nor
-    the SDK copy exists (the fold logic is still covered there —
-    _fold_episodes is shared with the applyInPandasWithState path
-    tested above).
-    """
-    pytest.importorskip("google.protobuf")
-    import os as _os
-    import time as _time
-
-    src = str(tmp_path / "tws_src")
-    _os.makedirs(src)
-
-    def write_file(rows, mtime):
-        spark.createDataFrame(
-            rows, "user_id bigint, ts_s string, value double"
-        ).select(
-            "user_id", F.col("ts_s").cast("timestamp").alias("ts"), "value"
-        ).coalesce(1).write.mode("append").parquet(src)
-        for f in _os.listdir(src):
-            p = _os.path.join(src, f)
-            if f.endswith(".parquet") and _os.path.getmtime(p) > mtime:
-                _os.utime(p, (mtime, mtime))
-
-    t0 = _time.time() - 1000
-    write_file([(1, "2024-01-01 10:00:00", 1.0), (1, "2024-01-01 10:10:00", 2.0)], t0)
-    write_file(
-        [
-            (1, "2024-01-01 11:00:00", 3.0),
-            (1, "2024-01-01 11:05:00", 4.0),
-            (2, "2024-01-01 09:00:00", 5.0),
-            (2, "2024-01-01 10:00:00", 6.0),
-        ],
-        t0 + 10,
-    )
-
-    from sleep_edf_data_pipeline_spark.streaming.stateful import (
-        streaming_episodes_tws,
-    )
-
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
-    prior = spark.conf.get(provider_key, None)
-    spark.conf.set(
-        provider_key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        stream = (
-            spark.readStream.schema("user_id bigint, ts timestamp, value double")
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
-        )
-        q = (
-            streaming_episodes_tws(stream, gap="30 minutes")
-            .writeStream.format("memory")
-            .queryName("episodes_tws_test")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-    finally:
-        if prior is None:
-            spark.conf.unset(provider_key)
-        else:
-            spark.conf.set(provider_key, prior)
-    rows = spark.sql(
-        "SELECT * FROM episodes_tws_test ORDER BY user_id, episode_start"
-    ).collect()
-    assert [
-        (r["user_id"], str(r["episode_start"]), str(r["episode_end"]),
-         r["n_events"], r["total_value"])
-        for r in rows
-    ] == [
-        (1, "2024-01-01 10:00:00", "2024-01-01 10:10:00", 2, 3.0),
-        (2, "2024-01-01 09:00:00", "2024-01-01 09:00:00", 1, 5.0),
-    ]
 
 
 def test_streaming_episode_parity_full_seeded_corpus(spark, tmp_path):
