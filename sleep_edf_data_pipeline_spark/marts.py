@@ -15,6 +15,15 @@ serving story: correct, but a 6-window recompute for a 1-row answer.
   (tests/test_serving_mart.py asserts the pruned-scan row metric);
 * every later serving query is a parquet scan with the predicate
   pushed — milliseconds, independent of pipeline depth;
+* a hit is ONE memoized frame per committed mart and session: the
+  first serve of a mart in a session runs ``spark.read.parquet`` (directory listing,
+  relation analysis and a schema-inference job), later hits return
+  that same frame.  This is safe because a committed mart directory
+  is immutable — it is only ever created whole by an atomic rename —
+  and the memo entry is checked on every hit against the mart path
+  (which carries the source fingerprint) plus the ``_SUCCESS`` stat,
+  so a mart deleted or rebuilt out of band is re-read, never served
+  from a stale file index;
 * the cache key is a CONTENT FINGERPRINT of the source table
   (tables.table_fingerprint), so a rewritten corpus invalidates
   automatically instead of silently serving a stale mart;
@@ -46,6 +55,15 @@ from .writers.layout import write_clustered
 MART_ROOT = os.environ.get("SPARK_GRAFT_MART_DIR", "/tmp/spark_graft_marts")
 
 _CODE_VERSION: str | None = None
+
+#: (sf_dir, source_table, name) -> (path, _SUCCESS (st_ino, st_mtime_ns),
+#: session, frame).  One entry per distinct mart: a superseded version
+#: (new fingerprint, new path) replaces its entry.  Entries are checked
+#: on every hit, so an unsynchronised race between two serving threads
+#: only costs a redundant read, never a stale frame.
+_FRAMES: dict[
+    tuple[str, str, str], tuple[str, tuple[int, int] | None, SparkSession, DataFrame]
+] = {}
 
 
 def _code_version() -> str:
@@ -80,6 +98,15 @@ def _mart_path(sf_dir: str, source_table: str, name: str) -> str:
     return os.path.join(MART_ROOT, h, name)
 
 
+def _commit_stat(path: str) -> tuple[int, int] | None:
+    """(st_ino, st_mtime_ns) of ``<path>/_SUCCESS``, None if uncommitted."""
+    try:
+        st = os.stat(os.path.join(path, "_SUCCESS"))
+    except FileNotFoundError:
+        return None
+    return (st.st_ino, st.st_mtime_ns)
+
+
 def serve(
     spark: SparkSession,
     sf_dir: str,
@@ -94,21 +121,44 @@ def serve(
     ``build`` produces the mart frame (runs at most once per corpus
     content); ``cluster_cols`` drive the range layout so serving
     predicates on them prune.
+
+    A hit returns one memoized frame per committed mart and session:
+    no directory listing and no schema-inference job.  The committed
+    directory is immutable, and a memo entry is reused only while the
+    mart path (source fingerprint + code version), the ``_SUCCESS``
+    stat and the session all match, so a rewritten source, a deleted
+    or rebuilt mart, or another session falls through to a fresh read.
     """
+    key = (sf_dir, source_table, name)
     path = _mart_path(sf_dir, source_table, name)
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
+    stat = _commit_stat(path)
+    memo = _FRAMES.get(key)
+    if stat is not None and memo is not None:
+        m_path, m_stat, m_spark, df = memo
+        if m_path == path and m_stat == stat and m_spark is spark:
+            return df
+    if stat is None:
         tmp = f"{path}.tmp-{uuid.uuid4().hex}"
         os.makedirs(os.path.dirname(path), exist_ok=True)
         write_clustered(build(), tmp, cluster_cols, n_files=n_files)
         try:
             os.rename(tmp, path)
         except OSError:
-            # a concurrent builder committed first — its copy is
-            # byte-equivalent (deterministic build); keep it
+            # only a lost race is tolerated: a concurrent builder
+            # committed first and its copy holds the same rows (the
+            # range split points may differ); any other failure
+            # propagates
             shutil.rmtree(tmp, ignore_errors=True)
-    return spark.read.parquet(path)
+            if _commit_stat(path) is None:
+                raise
+        stat = _commit_stat(path)
+    df = spark.read.parquet(path)
+    _FRAMES[key] = (path, stat, spark, df)
+    return df
 
 
 def clear_marts() -> None:
-    """Drop every materialized mart (tests / explicit reset)."""
+    """Drop every materialized mart and every memoized mart frame
+    (tests / explicit reset)."""
+    _FRAMES.clear()
     shutil.rmtree(MART_ROOT, ignore_errors=True)

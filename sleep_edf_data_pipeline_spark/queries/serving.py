@@ -7,6 +7,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..marts import serve
 from ..plans import sleep_pipeline as sp
 from ..quality.validate import epoch_contract_checks, run_checks, uniqueness_check
 from .events_domain import (
@@ -16,10 +17,9 @@ from .events_domain import (
     STAGED_CTE,
     epochs_from_events,
 )
+from .sleep_relational import ORACLE_SLEEP_SUMMARY, q_sleep_summary
 
 STAGED_WITH = "WITH " + BASE_CTE.strip() + ",\n" + STAGED_CTE.strip()
-from ..marts import serve
-from .sleep_relational import ORACLE_SLEEP_SUMMARY, q_sleep_summary
 
 #: The demo subject every point-lookup serves (dashboard.py pattern).
 LOOKUP_SUBJECT = 7

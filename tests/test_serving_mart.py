@@ -9,6 +9,7 @@ mart lifecycle — the oracle VALUES are covered by the driver mirror
 
 from __future__ import annotations
 
+import errno
 import os
 import shutil
 
@@ -21,7 +22,7 @@ from sleep_edf_data_pipeline_spark.queries.serving import (
     q_subject_lookup,
     q_subject_timeseries,
 )
-from sleep_edf_data_pipeline_spark.writers.layout import scan_rows_read
+from sleep_edf_data_pipeline_spark.writers.layout import scan_rows_read, write_clustered
 
 
 def test_timeseries_scan_prunes_to_subject_range(spark, sf_dir):
@@ -64,13 +65,11 @@ def test_fingerprint_invalidates_on_rewrite(tmp_path):
     assert p2 == marts._mart_path(str(src), "events", "sleep_summary")
 
 
-def test_lost_rename_race_discards_loser(spark, sf_dir, monkeypatch):
+def test_lost_rename_race_discards_loser(spark, sf_dir, monkeypatch, tmp_path):
     """If another builder commits first, serve() keeps the winner's
     copy and removes its own tmp dir."""
     # point the mart root at a scratch dir so we control commit state
-    scratch = "/tmp/spark_graft_marts_test_race"
-    shutil.rmtree(scratch, ignore_errors=True)
-    monkeypatch.setattr(marts, "MART_ROOT", scratch)
+    monkeypatch.setattr(marts, "MART_ROOT", str(tmp_path / "marts"))
     path = marts._mart_path(sf_dir, "events", "sleep_summary")
 
     real_rename = os.rename
@@ -95,7 +94,96 @@ def test_lost_rename_race_discards_loser(spark, sf_dir, monkeypatch):
     parent = os.path.dirname(path)
     leftovers = [n for n in os.listdir(parent) if ".tmp-" in n]
     assert leftovers == []
-    shutil.rmtree(scratch, ignore_errors=True)
+
+
+def test_failed_rename_propagates(spark, sf_dir, monkeypatch, tmp_path):
+    """A commit rename that fails for any reason other than a lost race
+    (here EXDEV) must raise its own error, not surface later as a
+    missing-path read, and must still remove the tmp copy."""
+    monkeypatch.setattr(marts, "MART_ROOT", str(tmp_path / "marts"))
+    path = marts._mart_path(sf_dir, "events", "xdev_mart")
+
+    def cross_device(srcp, dstp):
+        raise OSError(errno.EXDEV, "Invalid cross-device link", srcp)
+
+    monkeypatch.setattr(os, "rename", cross_device)
+    with pytest.raises(OSError) as exc:
+        marts.serve(
+            spark, sf_dir, "xdev_mart", "events", lambda: spark.range(8),
+            cluster_cols=["id"], n_files=1,
+        )
+    assert exc.value.errno == errno.EXDEV
+    parent = os.path.dirname(path)
+    assert [n for n in os.listdir(parent) if ".tmp-" in n] == []
+    assert not os.path.exists(path)
+
+
+def _job_ids(spark) -> set[int]:
+    # listener events are delivered asynchronously: drain the bus so
+    # every job that already ran is in the status store
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    return set(spark.sparkContext.statusTracker().getJobIdsForGroup(None))
+
+
+def _serve_values(spark, sf_dir, name, values):
+    rows = list(enumerate(values))
+    return marts.serve(
+        spark, sf_dir, name, "events",
+        lambda: spark.createDataFrame(rows, "id bigint, v bigint"),
+        cluster_cols=["id"], n_files=2,
+    )
+
+
+def test_warm_hit_issues_no_spark_job(spark, sf_dir):
+    """A hit on a committed mart is the memoized frame: resolving it
+    runs no Spark job (a bare ``spark.read.parquet`` runs a schema-
+    inference job), and it answers exactly like a fresh read."""
+    q_subject_lookup(spark, sf_dir).collect()  # warm: built and read once
+    before = _job_ids(spark)
+    df = marts.serve(
+        spark, sf_dir, "sleep_summary", "events", None,  # committed: no build
+        cluster_cols=["subject_id"], n_files=1,
+    )
+    assert _job_ids(spark) - before == set()
+    path = marts._mart_path(sf_dir, "events", "sleep_summary")
+    fresh = spark.read.parquet(path)
+    want = fresh.filter(fresh.subject_id == LOOKUP_SUBJECT).collect()
+    assert want
+    assert df.filter(df.subject_id == LOOKUP_SUBJECT).collect() == want
+
+
+def test_memo_is_per_session(spark, sf_dir):
+    """A frame memoized in one session is never handed to another: it
+    would run under the first session's conf."""
+    q_subject_lookup(spark, sf_dir).collect()
+    other = spark.newSession()
+    df = marts.serve(
+        other, sf_dir, "sleep_summary", "events", None,  # committed: no build
+        cluster_cols=["subject_id"], n_files=1,
+    )
+    assert df.sparkSession is other
+
+
+@pytest.mark.parametrize("rebuild", ["clear_marts", "out_of_band"])
+def test_memo_rereads_a_rebuilt_mart(spark, sf_dir, monkeypatch, tmp_path, rebuild):
+    """A mart rebuilt at the same path — by serve() after
+    ``clear_marts()``, or by another builder after an ``rmtree`` that
+    left the memo in place — is read from its new files, never from
+    the old frame."""
+    monkeypatch.setattr(marts, "MART_ROOT", str(tmp_path / "marts"))
+    path = marts._mart_path(sf_dir, "events", "memo_mart")
+    assert _serve_values(spark, sf_dir, "memo_mart", [1, 2]).count() == 2
+    if rebuild == "clear_marts":
+        marts.clear_marts()
+    else:
+        shutil.rmtree(path)
+        rows = list(enumerate([7, 8, 9]))
+        write_clustered(spark.createDataFrame(rows, "id bigint, v bigint"), path, ["id"], n_files=2)
+    df = _serve_values(spark, sf_dir, "memo_mart", [7, 8, 9])
+    got = sorted(tuple(r) for r in df.filter("v > 0").collect())
+    want = sorted(tuple(r) for r in spark.read.parquet(path).filter("v > 0").collect())
+    assert got == want
+    assert [v for _, v in got] == [7, 8, 9]
 
 
 def test_code_version_salts_mart_path(tmp_path, monkeypatch):
