@@ -2,8 +2,7 @@
 
 Writes ``plans/r<round>/<query>_<tag>.txt`` per touched query, captured
 before and after each change so plan shapes (Exchange count, join
-strategy, PushedFilters, codegen spans) can be diffed against the
-claims in OPTIMIZATION_r<round>.md.
+strategy, PushedFilters, codegen spans) can be diffed.
 
 Usage: python scripts/dump_plan.py <round> <tag> <name> [<name> ...]
        (round is e.g. 13; tag is e.g. "before" / "after"; sf dir from

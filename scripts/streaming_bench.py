@@ -1,6 +1,6 @@
 """Streaming throughput bench: drain sf0.1 through each streaming op.
 
-Batch bench (bench.py) covers the relational/corpus surface; this
+The repo benchmark (perfbench/) covers the ELT and corpus paths; this
 measures the Structured Streaming operators' sustained throughput —
 rows drained per second across multiple micro-batches (file source,
 ``maxFilesPerTrigger`` forces real batch boundaries so state actually

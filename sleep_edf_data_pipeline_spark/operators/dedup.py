@@ -71,6 +71,34 @@ def word_shingles(words: Column, n: int = 3) -> Column:
     )
 
 
+#: Every id ≡ 0 (mod EVAL_MOD) is the held-out "benchmark" set the
+#: train side must be decontaminated against (~2.4% of the corpus —
+#: benchmark sets are tiny relative to training corpora, which is what
+#: makes broadcasting the eval side the right plan).
+EVAL_MOD = 41
+
+#: n-gram width for contamination matching.  GPT-3 used 13-gram overlap
+#: on natural text; the synthetic corpus has ~40 distinct tokens, so a
+#: 5-gram keeps the collision rate in the regime the real filter
+#: operates in (rare-but-present matches).
+DECONTAM_N = 5
+
+
+def is_eval(id_col: str = "doc_id") -> Column:
+    """True for the rows of the held-out eval split."""
+    return F.col(id_col) % EVAL_MOD == 0
+
+
+def decontam_grams(docs: DataFrame) -> DataFrame:
+    """(doc_id, gram): each document's distinct DECONTAM_N-word shingles."""
+    return docs.select(
+        "doc_id",
+        F.explode(
+            F.array_distinct(word_shingles(tokens(F.col("text")), DECONTAM_N))
+        ).alias("gram"),
+    )
+
+
 def exact_dedup(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Exact dedup on a content hash: one row per distinct text.
 
@@ -458,7 +486,7 @@ def simhash_near_dups(
     frame is lazy, so this function cannot unpersist after the action
     it never runs.  Long-lived sessions that build this query
     repeatedly should ``spark.catalog.clearCache()`` between
-    invocations (bench.py and scripts/scale_smoke.py do).
+    invocations (scripts/scale_smoke.py does).
     """
     fingerprints = fingerprints.persist()
     width = bits // chunks

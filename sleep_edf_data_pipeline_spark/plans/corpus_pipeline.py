@@ -3,7 +3,9 @@ ONE fail-fast DAG.
 
 The individual operators (quality scoring, exact/near dedup,
 decontamination, chunking, splitting, shard export) are each
-oracle-verified in isolation; this composes them the way a production
+oracle-verified in isolation through the registry query that wraps the
+same ``operators/`` definition (this module imports nothing from
+``queries/``); this composes them the way a production
 corpus build runs them — one lineage from raw documents to JSONL
 training shards, with the reference's V7 discipline (a stage's checks
 gate its dependents, plans/runner.py) and an audit trail of row
@@ -28,42 +30,39 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..operators.dedup import minhash_lsh_dedup, tokens, word_shingles
+from ..operators.bloom import build_bloom, with_bloom_probe
+from ..operators.dedup import (  # noqa: F401 (DECONTAM_N, EVAL_MOD re-exported)
+    DECONTAM_N,
+    EVAL_MOD,
+    decontam_grams,
+    is_eval,
+    minhash_lsh_dedup,
+)
+from ..operators.text import (
+    dsir_weights,
+    md5_split,
+    quality_logit_tm,
+    token_chunks,
+    unigram_scores,
+    with_quality_score,
+)
 from ..quality.validate import Check, not_null
 from ..tables import table
 from ..writers.corpus_export import export_jsonl_shards
 from .runner import Model, ModelRunner
 
-#: Same knobs as the oracle-verified standalone queries.
-EVAL_MOD = 41
-DECONTAM_N = 5
+#: Chunk geometry: 64-token windows every 48 tokens (16-token overlap).
 CHUNK_TOKENS = 64
 CHUNK_STRIDE = 48
 
 
 def _quality_filter(docs: DataFrame) -> DataFrame:
-    """Keep docs the linear quality model accepts (logit > 0).
-
-    Same exact-integer scoring as queries/text_queries.py:
-    quality_classifier (weights in tenth-micros over round-6 features).
-    """
-    from ..operators.text import with_quality_score
-    from ..queries.text_queries import CLS_B, CLS_W
-
-    feats = with_quality_score(docs)
-    cols = (
-        "alpha_ratio",
-        "space_ratio",
-        "stopword_ratio",
-        "token_diversity",
-        "length_score",
+    """Keep docs the linear quality model accepts (logit > 0)."""
+    return (
+        with_quality_score(docs)
+        .filter(quality_logit_tm() > 0)
+        .select(*docs.columns)
     )
-    logit_tm = F.lit(int(CLS_B * 10) * 1_000_000)
-    for w, c in zip(CLS_W, cols):
-        logit_tm = logit_tm + F.lit(int(w * 10)) * F.round(
-            F.col(c) * 1e6
-        ).cast("bigint")
-    return feats.filter(logit_tm > 0).select(*docs.columns)
 
 
 def _exact_dedup(docs: DataFrame) -> DataFrame:
@@ -97,56 +96,17 @@ def _decontaminate(docs: DataFrame) -> DataFrame:
     identical to the plain semi-join it replaces, but the join input
     stops scaling with the corpus.
     """
-    from ..operators.bloom import build_bloom, with_bloom_probe
-
-    grams = docs.select(
-        "doc_id",
-        F.explode(
-            F.array_distinct(word_shingles(tokens(F.col("text")), DECONTAM_N))
-        ).alias("gram"),
-    )
-    is_eval = F.col("doc_id") % EVAL_MOD == 0
-    eval_grams = grams.filter(is_eval).select("gram").distinct()
+    grams = decontam_grams(docs)
+    eval_grams = grams.filter(is_eval()).select("gram").distinct()
     words, nbits = build_bloom(eval_grams, "gram")
-    probed = with_bloom_probe(grams.filter(~is_eval), words, nbits, F.col("gram"))
+    probed = with_bloom_probe(grams.filter(~is_eval()), words, nbits, F.col("gram"))
     contaminated = (
         probed.filter(F.col("_maybe"))
         .join(F.broadcast(eval_grams), "gram", "left_semi")
         .select("doc_id")
         .distinct()
     )
-    return docs.filter(~is_eval).join(contaminated, "doc_id", "left_anti")
-
-
-def _chunk(docs: DataFrame) -> DataFrame:
-    """Codegen-only sliding chunker (explode(sequence) + slice)."""
-    toks = F.split(F.col("text"), " ")
-    n_chunks = F.ceil(F.size(toks) / F.lit(float(CHUNK_STRIDE))).cast("int")
-    exploded = docs.select(
-        "doc_id",
-        "source",
-        toks.alias("_toks"),
-        F.explode(F.sequence(F.lit(0), n_chunks - 1)).alias("chunk_idx"),
-    )
-    window = F.slice(
-        F.col("_toks"), F.col("chunk_idx") * CHUNK_STRIDE + 1, CHUNK_TOKENS
-    )
-    return exploded.select(
-        "doc_id",
-        "source",
-        F.col("chunk_idx").cast("int").alias("chunk_idx"),
-        F.concat_ws(" ", window).alias("chunk_text"),
-        F.size(window).cast("int").alias("n_tokens"),
-    )
-
-
-def _split(chunks: DataFrame) -> DataFrame:
-    """Deterministic md5-bucket split (engine-reproducible, no RNG)."""
-    h = F.substring(F.md5(F.col("doc_id").cast("string")), 1, 1)
-    return chunks.withColumn(
-        "split",
-        F.when(h <= "b", "train").when(h.isin("c", "d"), "val").otherwise("test"),
-    )
+    return docs.filter(~is_eval()).join(contaminated, "doc_id", "left_anti")
 
 
 def _select(docs: DataFrame) -> DataFrame:
@@ -158,8 +118,6 @@ def _select(docs: DataFrame) -> DataFrame:
     — one tiny aggregate broadcast back, no global sort).  Both scores
     ride along as columns for downstream audit.
     """
-    from ..queries.corpus_quality import dsir_weights, unigram_scores
-
     scored = docs.join(
         dsir_weights(docs).select("doc_id", "avg_llr"), "doc_id"
     ).join(unigram_scores(docs).select("doc_id", "mean_nll"), "doc_id")
@@ -169,6 +127,27 @@ def _select(docs: DataFrame) -> DataFrame:
     return scored.crossJoin(F.broadcast(thresh)).filter(
         F.col("avg_llr") >= F.col("_med")
     ).drop("_med")
+
+
+def _cache_entries(spark: SparkSession) -> list:
+    """The session's cached plans (``CachedData`` entries), in order.
+
+    Spark has no public listing of cached plans, so this reads the
+    cache manager's entry list (classic PySpark only).
+    """
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    field = cm.getClass().getDeclaredField("cachedData")
+    field.setAccessible(True)
+    entries = field.get(cm)
+    return [entries.apply(i) for i in range(entries.size())]
+
+
+def _uncache_new(spark: SparkSession, before: list) -> None:
+    """Uncache every plan cached since ``before`` was taken."""
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    for entry in _cache_entries(spark):
+        if entry not in before:
+            cm.uncacheQuery(spark._jsparkSession, entry.plan(), False, False)
 
 
 def build_corpus(
@@ -184,7 +163,25 @@ def build_corpus(
     ``select=True`` inserts the data-selection stage (DSIR importance
     + unigram-LM scoring, target-likeness filter) between
     decontamination and chunking.
+
+    The frames the build persists — its ``cached`` models and the
+    operators' own persists (the MinHash signatures, the DSIR
+    histogram) — are released when the build returns or fails, so a
+    later build in the session never plans against them (a rewritten
+    input would otherwise be served its old signatures).  Frames the
+    caller cached before the build stay cached.
     """
+    before = _cache_entries(spark)
+    try:
+        return _build(spark, sf_dir, out_dir, select)
+    finally:
+        _uncache_new(spark, before)
+
+
+def _build(
+    spark: SparkSession, sf_dir: str, out_dir: str, select: bool
+) -> tuple[DataFrame, dict[str, DataFrame]]:
+    """The stage DAG, the shard export and the audit of build_corpus."""
     runner = ModelRunner(spark, warehouse_dir=f"{out_dir}/warehouse")
     b = runner.built
     models = [
@@ -232,7 +229,9 @@ def build_corpus(
     models += [
         Model(
             "corpus_chunks",
-            lambda s: _chunk(b[chunk_input]),
+            lambda s: token_chunks(
+                b[chunk_input], CHUNK_TOKENS, CHUNK_STRIDE, ("source",)
+            ),
             depends_on=(chunk_input,),
             checks=(
                 Check(
@@ -244,7 +243,7 @@ def build_corpus(
         ),
         Model(
             "corpus_split",
-            lambda s: _split(b["corpus_chunks"]),
+            lambda s: b["corpus_chunks"].withColumn("split", md5_split()),
             depends_on=("corpus_chunks",),
             materialization="cached",
         ),
@@ -262,7 +261,4 @@ def build_corpus(
     audit_rows = [(m.name, built[m.name].count()) for m in models]
     audit = spark.createDataFrame(audit_rows, "stage string, rows bigint")
     audit.coalesce(1).write.mode("overwrite").parquet(f"{out_dir}/audit")
-    for m in models:
-        if m.materialization == "cached":
-            built[m.name].unpersist()
     return audit, built

@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import udtf
 
+from ..operators.text import md5_split, token_chunks
 from ..tables import table
 
 #: Chunk geometry: 50-token windows every 40 tokens (10-token overlap).
@@ -48,28 +49,12 @@ class ChunkTokens:
 def q_document_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Chunk every document natively; codegen-only, zero shuffles.
 
-    ``explode(sequence(0, n_chunks-1))`` synthesizes the chunk index,
-    ``slice`` carves the token window, ``concat_ws`` re-joins it — the
-    same semantics as the UDTF variant below with no Python in the
-    plan.  ``explode`` of a null sequence emits no rows, matching the
-    UDTF's null-text behavior.
+    :func:`token_chunks` has the same semantics as the UDTF variant
+    below with no Python in the plan; a null text emits no rows,
+    matching the UDTF's null-text behavior.
     """
-    docs = table(spark, sf_dir, "documents")
-    toks = F.split(F.col("text"), " ")
-    n_chunks = F.ceil(F.size(toks) / F.lit(float(CHUNK_STRIDE))).cast("int")
-    exploded = docs.select(
-        "doc_id",
-        toks.alias("_toks"),
-        F.explode(F.sequence(F.lit(0), n_chunks - 1)).alias("chunk_idx"),
-    )
-    window = F.slice(
-        F.col("_toks"), F.col("chunk_idx") * CHUNK_STRIDE + 1, CHUNK_TOKENS
-    )
-    return exploded.select(
-        "doc_id",
-        F.col("chunk_idx").cast("int").alias("chunk_idx"),
-        F.concat_ws(" ", window).alias("chunk_text"),
-        F.size(window).cast("int").alias("n_tokens"),
+    return token_chunks(
+        table(spark, sf_dir, "documents"), CHUNK_TOKENS, CHUNK_STRIDE
     )
 
 
@@ -119,15 +104,8 @@ def q_dataset_split_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     keeps the result exact and order-free.
     """
     docs = table(spark, sf_dir, "documents")
-    h = F.substring(F.md5(F.col("doc_id").cast("string")), 1, 1)
-    split = (
-        F.when(h <= "b", "train")
-        .when(h.isin("c", "d"), "val")
-        .otherwise("test")
-        .alias("split")
-    )
     return (
-        docs.select(split, "lang", "n_chars")
+        docs.select(md5_split().alias("split"), "lang", "n_chars")
         .groupBy("split", "lang")
         .agg(
             F.count("*").alias("n_docs"),

@@ -46,17 +46,10 @@ from pyspark.sql import functions as F
 
 from ..functions.hashing import hash64, hash64_sql
 from ..operators.bloom import build_bloom, with_bloom_probe
-from ..operators.dedup import tokens, word_shingles
+from ..operators.dedup import decontam_grams, is_eval, tokens
+from ..operators.text import DSIR_BUCKETS, dsir_weights, unigram_scores
 from ..tables import spread, table
-from .training_data import (
-    _GRAMS_SQL,
-    DECONTAM_N,
-    EVAL_MOD,
-    ORACLE_DECONTAMINATE_OVERLAP,
-)
-
-#: DSIR hashed-feature space (buckets for bigram counts).
-DSIR_BUCKETS = 4096
+from .training_data import ORACLE_DECONTAMINATE_OVERLAP
 
 #: importance_resample: probability granularity 2^20 (exact integers).
 RESAMPLE_SCALE = 1 << 20
@@ -88,16 +81,9 @@ def q_bloom_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     contamination rate (~% of rows), so the broadcast-join cost stops
     scaling with the corpus entirely.
     """
-    docs = spread(table(spark, sf_dir, "documents"), "doc_id")
-    grams = docs.select(
-        "doc_id",
-        F.explode(
-            F.array_distinct(word_shingles(tokens(F.col("text")), DECONTAM_N))
-        ).alias("gram"),
-    )
-    is_eval = F.col("doc_id") % EVAL_MOD == 0
-    eval_grams = grams.filter(is_eval).select("gram").distinct()
-    train = grams.filter(~is_eval)
+    grams = decontam_grams(spread(table(spark, sf_dir, "documents"), "doc_id"))
+    eval_grams = grams.filter(is_eval()).select("gram").distinct()
+    train = grams.filter(~is_eval())
 
     words, nbits = build_bloom(eval_grams, "gram")
     maybe = with_bloom_probe(train, words, nbits, F.col("gram"))
@@ -163,14 +149,7 @@ def q_decontaminate_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = spread(table(spark, sf_dir, "documents"), "doc_id")
     n_eval_grams = (
-        docs.filter(F.col("doc_id") % EVAL_MOD == 0)
-        .select(
-            F.explode(
-                F.array_distinct(
-                    word_shingles(tokens(F.col("text")), DECONTAM_N)
-                )
-            ).alias("gram")
-        )
+        decontam_grams(docs.filter(is_eval()))
         .agg(F.approx_count_distinct("gram").alias("n"))
         .collect()[0]["n"]
     )
@@ -184,83 +163,6 @@ def q_decontaminate_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # dsir_importance_weights
 # --------------------------------------------------------------------------
-
-
-def _bigrams(docs: DataFrame) -> DataFrame:
-    return docs.select(
-        "doc_id",
-        "lang",
-        F.explode(word_shingles(tokens(F.col("text")), 2)).alias("gram"),
-    )
-
-
-def dsir_weights(docs: DataFrame) -> DataFrame:
-    """(doc_id, n_grams, total_llr, avg_llr) — see q_dsir_importance_weights.
-
-    Takes any frame with (doc_id, lang, text); reused by the corpus
-    build DAG on its post-dedup frame.
-
-    The expensive work (tokenize → shingle → hash the whole corpus)
-    happens ONCE: everything aggregates from the per-doc bucket
-    histogram ``hist`` (≤4096 rows per doc, far smaller than the gram
-    stream), and both consumers of ``hist`` — the per-bucket count
-    table and the final per-doc sum — share the identical
-    (doc_id, lang, bucket) aggregation subtree, so Spark reuses one
-    exchange instead of re-exploding the corpus per branch (the r04
-    plan exploded it three times; measured 8.7 s → ~2 s at scale10).
-    """
-    grams = _bigrams(docs).withColumn(
-        "bucket", hash64(F.col("gram")) % DSIR_BUCKETS
-    )
-    # persist + materialize: the LLR table is built as a BROADCAST
-    # (its own job), which defeats exchange reuse — unpersisted, the
-    # corpus explodes once per consumer.  hist is O(docs × 4096) —
-    # far smaller than the gram stream — and the cache is released by
-    # the caller like every other constructor persist (bench/corpus
-    # DAG call clearCache between queries).
-    hist = (
-        grams.groupBy("doc_id", "lang", "bucket")
-        .agg(F.count("*").alias("c"))
-        .persist()
-    )
-    hist.count()
-    per_bucket = hist.groupBy("bucket").agg(
-        F.sum("c").alias("cr"),
-        F.sum(F.when(F.col("lang") == "en", F.col("c")).otherwise(0))
-        .cast("bigint")
-        .alias("ct"),
-    )
-    totals = per_bucket.agg(
-        F.sum("cr").alias("nr"), F.sum("ct").alias("nt")
-    )
-    b = F.lit(DSIR_BUCKETS).cast("bigint")
-    llr_micro = F.round(
-        F.log(
-            ((F.col("ct") + 1) * (F.col("nr") + b)).cast("double")
-            / ((F.col("cr") + 1) * (F.col("nt") + b)).cast("double")
-        )
-        * F.lit(1e6)
-    ).cast("bigint")
-    llr = per_bucket.crossJoin(F.broadcast(totals)).select(
-        "bucket", llr_micro.alias("llr_micro")
-    )
-    return (
-        hist.join(F.broadcast(llr), "bucket")
-        .groupBy("doc_id")
-        .agg(
-            F.sum("c").cast("bigint").alias("n_grams"),
-            F.sum(F.col("c") * F.col("llr_micro")).alias("_s"),
-        )
-        .select(
-            "doc_id",
-            "n_grams",
-            (F.col("_s").cast("double") / F.lit(1e6)).alias("total_llr"),
-            (
-                F.col("_s").cast("double")
-                / (F.lit(1e6) * F.col("n_grams").cast("double"))
-            ).alias("avg_llr"),
-        )
-    )
 
 
 def q_dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -324,38 +226,6 @@ GROUP BY g.doc_id
 # --------------------------------------------------------------------------
 # unigram_logprob_scores
 # --------------------------------------------------------------------------
-
-
-def unigram_scores(docs: DataFrame) -> DataFrame:
-    """(doc_id, n_tokens, mean_nll) — see q_unigram_logprob_scores."""
-    toks = docs.select("doc_id", F.explode(tokens(F.col("text"))).alias("tok"))
-    counts = toks.groupBy("tok").agg(F.count("*").alias("c"))
-    total = toks.agg(F.count("*").alias("n_total"))
-    sur = (
-        counts.crossJoin(F.broadcast(total))
-        .select(
-            "tok",
-            F.round(
-                F.log(F.col("n_total").cast("double") / F.col("c").cast("double"))
-                * F.lit(1e6)
-            )
-            .cast("bigint")
-            .alias("sur_micro"),
-        )
-    )
-    return (
-        toks.join(F.broadcast(sur), "tok")
-        .groupBy("doc_id")
-        .agg(F.count("*").alias("n_tokens"), F.sum("sur_micro").alias("_s"))
-        .select(
-            "doc_id",
-            "n_tokens",
-            (
-                F.col("_s").cast("double")
-                / (F.lit(1e6) * F.col("n_tokens").cast("double"))
-            ).alias("mean_nll"),
-        )
-    )
 
 
 def q_unigram_logprob_scores(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -21,6 +21,7 @@ from ..operators.dedup import (
     simhash_near_dups,
     with_minhash,
 )
+from ..operators.text import md5_split
 from ..tables import spread, table
 
 H64 = "CAST('0x' || substr(md5({s}), 1, 15) AS BIGINT)"
@@ -429,17 +430,6 @@ WHERE s.src = 1
 """
 
 
-def _split_of(doc_id_col):
-    """train/val/test bucket of a doc id (same md5 rule as
-    dataset_split_stats — a pure projection, never a join)."""
-    h = F.substring(F.md5(doc_id_col.cast("string")), 1, 1)
-    return (
-        F.when(h <= "b", "train")
-        .when(h.isin("c", "d"), "val")
-        .otherwise("test")
-    )
-
-
 def q_cross_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup pairs that STRADDLE a train/val/test boundary.
 
@@ -462,8 +452,8 @@ def q_cross_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
         threshold=0.6,
     )
     return (
-        pairs.withColumn("split_a", _split_of(F.col("id_a")))
-        .withColumn("split_b", _split_of(F.col("id_b")))
+        pairs.withColumn("split_a", md5_split("id_a"))
+        .withColumn("split_b", md5_split("id_b"))
         .filter(F.col("split_a") != F.col("split_b"))
         .select("id_a", "id_b", "jaccard", "split_a", "split_b")
     )

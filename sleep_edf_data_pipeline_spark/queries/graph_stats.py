@@ -96,7 +96,7 @@ def q_pagerank_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``edges``/``nodes`` are persisted (read once per iteration); the
     returned frame is lazy, so the caller owns the cache lifetime —
     long-lived loops release it with ``spark.catalog.clearCache()``
-    (bench.py / scale_smoke.py do) or accept LRU eviction.
+    (scripts/scale_smoke.py does) or accept LRU eviction.
     """
     edges = _copurchase_edges(spark, sf_dir).persist()
     nodes = edges.select(F.col("src").alias("part")).distinct().persist()

@@ -8,9 +8,10 @@ Published practice: LLM eval-set decontamination via embedding
 cosine (e.g. the semantic-dedup stage of SemDeDup / D4 applied
 train-vs-eval instead of train-vs-train).
 
-Split convention matches the n-gram family: ``vec_id % EVAL_MOD == 0``
-is the held-out benchmark side (~2.4% — benchmark sets are tiny);
-every other vector is train-side and gets a contamination verdict.
+Split convention matches the n-gram family (``operators/dedup.is_eval``
+on ``vec_id``): ids divisible by EVAL_MOD are the held-out benchmark
+side (~2.4% — benchmark sets are tiny); every other vector is
+train-side and gets a contamination verdict.
 
 Scale shape (100 TB): k-means blocking shared with ``semdedup_prune``
 (same ``operators/clustering.py`` Lloyd loop, same k/iters constants,
@@ -33,9 +34,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.dedup import EVAL_MOD, is_eval
 from ..operators.similarity import dot, norm
 from ..tables import spread, table
-from .training_data import _SD_DIM, _SD_ITERS, _SD_K, EVAL_MOD, SEMDEDUP_TAU
+from .training_data import _SD_DIM, _SD_ITERS, _SD_K, SEMDEDUP_TAU
 
 
 def q_decontaminate_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -44,14 +46,13 @@ def q_decontaminate_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     vecs = spread(table(spark, sf_dir, "embeddings"), "vec_id")
     assigned, _ = kmeans(vecs, k=_SD_K, iters=_SD_ITERS)
     assigned = assigned.select("vec_id", "embedding", "cluster")
-    is_eval = F.col("vec_id") % EVAL_MOD == 0
-    ev = assigned.filter(is_eval).select(
+    ev = assigned.filter(is_eval("vec_id")).select(
         F.col("vec_id").alias("_eid"),
         F.col("embedding").alias("_ve"),
         F.col("cluster").alias("_c"),
         norm(F.col("embedding")).alias("_ne"),
     )
-    tr = assigned.filter(~is_eval).select(
+    tr = assigned.filter(~is_eval("vec_id")).select(
         "vec_id",
         F.col("embedding").alias("_vt"),
         F.col("cluster").alias("_c"),

@@ -6,8 +6,11 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators.text import (
+    CLS_B,
+    CLS_W,
     LANG_MARKERS,
     LANG_PRIORITY,
+    quality_logit_tm,
     with_fingerprints,
     with_language_id,
     with_quality_score,
@@ -273,14 +276,6 @@ LIMIT 20
 """
 
 
-#: Linear quality-classifier weights (offline-trained contract; the
-#: engine's job is broadcastable scoring, not training).  Ordered as
-#: (alpha_ratio, space_ratio, stopword_ratio, token_diversity,
-#: length_score); bias calibrated to split this corpus near its median.
-CLS_W = (2.0, -1.5, 3.0, 1.5, 0.8)
-CLS_B = -3.5
-
-
 def q_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """fastText-style linear quality model scored engine-side.
 
@@ -289,32 +284,16 @@ def q_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     literals (broadcast-by-constant), scoring is one fused columnar
     expression over features already computed in the scan stage — no
     UDF, no model server round-trip.  The score stays in logit space
-    (w·x + b, no transcendental), and the dot product runs in exact
-    integer arithmetic: features are round-6 doubles, so
-    ``round(x·10⁶)`` recovers their exact integer micros in any IEEE
-    engine, and the weighted sum of (micros × 10·w) is a plain BIGINT
-    — a float dot product is NOT cross-engine stable (DuckDB's FMA
-    contraction flipped one round-6 boundary in 500 docs at sf0.01).
+    (w·x + b, no transcendental); :func:`quality_logit_tm` computes it
+    in exact integer arithmetic.
     """
-    feats = q_quality_scores(spark, sf_dir)
-
-    def micros(c: str) -> F.Column:
-        return F.round(F.col(c) * 1e6).cast("bigint")
-
-    logit_tm = (  # tenth-micro units: weights ×10 are integers
-        F.lit(int(CLS_W[0] * 10)) * micros("alpha_ratio")
-        + F.lit(int(CLS_W[1] * 10)) * micros("space_ratio")
-        + F.lit(int(CLS_W[2] * 10)) * micros("stopword_ratio")
-        + F.lit(int(CLS_W[3] * 10)) * micros("token_diversity")
-        + F.lit(int(CLS_W[4] * 10)) * micros("length_score")
-        + F.lit(int(CLS_B * 10) * 1_000_000)
-    )
+    logit_tm = quality_logit_tm()
     # NO round(·, 6) here: the logit's exact value has 7 decimals
     # (tenth-micro units), so a 6-digit round ties on a half boundary
     # whenever the last digit is 5 — exactly where Spark (shortest-repr
     # HALF_UP) and DuckDB (binary-value) rounding diverge.  The single
     # division of identical BIGINTs is already bit-identical.
-    return feats.select(
+    return q_quality_scores(spark, sf_dir).select(
         "doc_id",
         (logit_tm.cast("double") / F.lit(1e7)).alias("quality_logit"),
         (logit_tm > 0).alias("is_quality"),

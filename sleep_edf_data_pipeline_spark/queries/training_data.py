@@ -20,24 +20,19 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from sleep_edf_data_pipeline_spark.operators.dedup import tokens, word_shingles
+from sleep_edf_data_pipeline_spark.operators.dedup import (
+    DECONTAM_N,
+    EVAL_MOD,
+    decontam_grams,
+    is_eval,
+    tokens,
+    word_shingles,
+)
 from sleep_edf_data_pipeline_spark.queries.dedup_queries import (
     ORACLE_DEDUP_CLUSTERS,
     q_dedup_clusters,
 )
 from sleep_edf_data_pipeline_spark.tables import spread, table
-
-#: Every doc_id ≡ 0 (mod EVAL_MOD) is the held-out "benchmark" set the
-#: train side must be decontaminated against (~2.4% of the corpus —
-#: benchmark sets are tiny relative to training corpora, which is what
-#: makes the broadcast in q_decontaminate_overlap the right plan).
-EVAL_MOD = 41
-
-#: n-gram width for contamination matching.  GPT-3 used 13-gram overlap
-#: on natural text; the synthetic corpus has ~40 distinct tokens, so a
-#: 5-gram keeps the collision rate in the regime the real filter
-#: operates in (rare-but-present matches).
-DECONTAM_N = 5
 
 #: Per-(source) cap for stratified downsampling.
 STRATUM_CAP = 8
@@ -53,18 +48,9 @@ def q_decontaminate_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     the corpus at all.  Output: train docs with their distinct-5-gram
     count, how many are contaminated, and the drop flag.
     """
-    docs = spread(table(spark, sf_dir, "documents"), "doc_id")
-    grams = docs.select(
-        "doc_id",
-        F.explode(
-            F.array_distinct(
-                word_shingles(tokens(F.col("text")), DECONTAM_N)
-            )
-        ).alias("gram"),
-    )
-    is_eval = F.col("doc_id") % EVAL_MOD == 0
-    eval_grams = grams.filter(is_eval).select("gram").distinct()
-    train = grams.filter(~is_eval)
+    grams = decontam_grams(spread(table(spark, sf_dir, "documents"), "doc_id"))
+    eval_grams = grams.filter(is_eval()).select("gram").distinct()
+    train = grams.filter(~is_eval())
     hit = train.join(
         F.broadcast(eval_grams.withColumn("_hit", F.lit(1))), "gram", "left"
     )

@@ -7,19 +7,8 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-#: Query modules, each exposing QUERIES and (optionally) ORACLES.
-#:
-#: ORDER MATTERS for the driver's correctness gate: it verifies the
-#: first 50 entries of collect() per round, so the window rotates each
-#: round.  Module order alone can't pack a round's debut queries into
-#: the window (they are scattered across modules), so collect() hoists
-#: the explicit ``_WINDOW`` name list to the front; everything else
-#: follows in module order.  tests/test_registry_window.py pins the
-#: resulting first 50 so any window change is an explicit edit.
-#:
-#: The current window's composition rationale lives in the comment
-#: block directly above ``_WINDOW`` below; the next round's rotation
-#: plan sits above that.
+#: Query modules, each exposing QUERIES and (optionally) ORACLES;
+#: collect() returns the queries in this module order.
 _MODULES = [
     "sleep_edf_data_pipeline_spark.queries.extras",
     "sleep_edf_data_pipeline_spark.queries.sleep_relational",
@@ -42,34 +31,22 @@ _MODULES = [
     "sleep_edf_data_pipeline_spark.queries.tpch_complete",
     "sleep_edf_data_pipeline_spark.queries.quantization_queries",
     "sleep_edf_data_pipeline_spark.queries.corpus_quality",
-    # r04 debuts — appended at the END so the pinned round-4 window is
-    # untouched; rotate into the window in round 5.
     "sleep_edf_data_pipeline_spark.queries.timeseries_extra",
     "sleep_edf_data_pipeline_spark.queries.retrieval",
     "sleep_edf_data_pipeline_spark.queries.selection_extra",
-    # r05 debuts — appended at the END so the pinned round-5 window is
-    # untouched; rotate into the window in round 6 (see plan above).
     "sleep_edf_data_pipeline_spark.queries.heavy_hitters",
-    # r06 debuts — appended at the END so the pinned round-6 window is
-    # untouched; rotate into the window in round 7 (see plan above).
     "sleep_edf_data_pipeline_spark.queries.lm_data_extras",
     "sleep_edf_data_pipeline_spark.queries.engine_extras",
     "sleep_edf_data_pipeline_spark.queries.drift_stats",
     "sleep_edf_data_pipeline_spark.queries.assoc_mining",
     "sleep_edf_data_pipeline_spark.queries.trend_stats",
     "sleep_edf_data_pipeline_spark.queries.storage_roundtrip",
-    # r07 debuts — appended at the END so the pinned round-7 window is
-    # untouched; rotate into the window in round 8 (see plan above).
     "sleep_edf_data_pipeline_spark.queries.tokenizer_apply",
     "sleep_edf_data_pipeline_spark.queries.embedding_drift",
     "sleep_edf_data_pipeline_spark.queries.occupancy",
     "sleep_edf_data_pipeline_spark.queries.edit_distance",
-    # r08 debuts — appended at the END so the pinned round-8 window is
-    # untouched; rotate into the window in round 9 (see plan above).
     "sleep_edf_data_pipeline_spark.queries.url_dedup",
     "sleep_edf_data_pipeline_spark.queries.span_dedup",
-    # r09 debuts — appended at the END so the pinned round-9 window is
-    # untouched; rotate into the window in round 10 (see plan above).
     "sleep_edf_data_pipeline_spark.queries.line_dedup",
     "sleep_edf_data_pipeline_spark.queries.semantic_decontam",
     "sleep_edf_data_pipeline_spark.queries.retrieval_fusion",
@@ -84,8 +61,6 @@ _MODULES = [
     "sleep_edf_data_pipeline_spark.queries.skyline",
     "sleep_edf_data_pipeline_spark.queries.chi2_drift",
     "sleep_edf_data_pipeline_spark.queries.sampling_advanced",
-    # r10 debuts — appended at the END so the pinned round-10 window is
-    # untouched; rotate into the window in round 11 (see plan above).
     "sleep_edf_data_pipeline_spark.queries.intra_doc_dedup",
     "sleep_edf_data_pipeline_spark.queries.quantile_sketch",
     "sleep_edf_data_pipeline_spark.queries.coreset",
@@ -95,13 +70,9 @@ _MODULES = [
     "sleep_edf_data_pipeline_spark.queries.hll_rollup",
     "sleep_edf_data_pipeline_spark.queries.vocab_coverage",
     "sleep_edf_data_pipeline_spark.queries.asof_forward",
-    # r11 debuts — appended at the END so the pinned round-11 window is
-    # untouched; rotate into the window in round 12 (see plan above).
     "sleep_edf_data_pipeline_spark.queries.unigram_lm",
     "sleep_edf_data_pipeline_spark.queries.kn_bigram",
     "sleep_edf_data_pipeline_spark.queries.lsh_recall",
-    # r12 debuts — appended at the END so the pinned round-12 window is
-    # untouched; rotate into the window in round 13 (see plan above).
     "sleep_edf_data_pipeline_spark.queries.lsh_recall_sampled",
     "sleep_edf_data_pipeline_spark.queries.unigram_lm_roundtrip",
     "sleep_edf_data_pipeline_spark.queries.tokenizer_roundtrip",
@@ -112,131 +83,18 @@ _MODULES = [
     "sleep_edf_data_pipeline_spark.queries.shard_packing",
 ]
 
-# ROUND-13 ROTATION PLAN — EXECUTED at round-13 start; the window below
-# is this plan realized, with one round-13 addition: the 7 queries whose
-# plans were rewritten by round-13 optimizations are hoisted for
-# re-verification (rule 2 of the original plan), displacing 7 of the
-# r09 backfill slots.  Original plan text kept verbatim for the
-# mechanical debut-enumeration guard in tests/test_registry_window.py:
-# (execute at the START of round 13, never
-# mid-round): after the round-12 window below runs, the stale pool is
-# the 25 r08-latest names the round-12 backfill did not reach
-# (cluster_size_histogram, corpus_shuffle_order, customer_distribution,
-# data_quality_checks, diagnostics, document_chunks,
-# domain_mixture_weights, dominant_small_part_suppliers,
-# forecast_revenue, frame_sampling, importance_resample,
-# important_stock, json_props_stats, length_bucket_packing,
-# multimodal_resize, part_supplier_diversity, peak_concurrent_sessions,
-# priority_order_counts, promo_revenue_share, ranking_suite,
-# returned_item_customers, session_window_agg_bucketed,
-# shipping_priority_buckets, stratified_sample, waiting_suppliers),
-# then the r09 pool ages in.  Compose round 13 as:
-# 1) the round-12 debuts, ENUMERATED so none can be omitted the way
-#    json_roundtrip_agg was from the r12 plan (VERDICT r11 item 1):
-#    lsh_neardup_recall_sampled, unigram_lm_roundtrip_stats,
-#    bpe_roundtrip_stats, wordpiece_roundtrip_stats,
-#    ivfpq_roundtrip_topk, jl_distortion_audit,
-#    ivfpq_probe_recall_curve, winnowing_fingerprints,
-#    winnowing_neardups, winnowing_source_stats,
-#    shard_snake_packing — all locally hash-green vs DuckDB
-#    at 3 SFs in round 12, never driver-rowed (cross-check the list
-#    against every module in the r12-debut block of _MODULES above
-#    before pinning the window — tests/test_registry_window.py
-#    enforces this mechanically);
-# 2) any query whose plan is rewritten after its round-12 driver row;
-# 3) the 25 r08-stale names above;
-# 4) backfill to exactly 50 with the stalest r09 names (LLM-data ops
-#    first).
-# Update tests/test_registry_window.py pins in the same commit.
-
-#: The driver-verification window: collect() hoists these 50 names to
-#: the front, in this order.  Every name must exist in some module.
-#:
-#: ROUND-13 WINDOW (the rotation plan above EXECUTED at round-13 start,
-#: plus this round's plan-rewrite re-verification rule):
-#: 1) the 11 round-12 debuts (all locally hash-green vs DuckDB at 3 SFs
-#:    in round 12, never driver-rowed) — enumerated from the plan above,
-#:    cross-checked mechanically by tests/test_registry_window.py;
-#: 2) the 7 queries whose PLANS WERE REWRITTEN by this round's
-#:    optimizations after their last driver row (kcore_membership,
-#:    bfs_distances, audio_features, dedup_cascade_verdict,
-#:    psi_drift_by_source, label_propagation_communities,
-#:    community_quality) — each also proven value-identical old-vs-new
-#:    at sf0.1 by row-hash this round, but the driver row is the
-#:    independent re-proof;
-#: 3) the 25 r08-stale names the round-12 backfill did not reach;
-#: 4) backfill to exactly 50 with 7 r09-stale names, LLM-data ops
-#:    first (dedup/ANN), leaving the remaining r09 pool for a future
-#:    round.
-_WINDOW = [
-    # -- round-12 debuts, never driver-rowed (11) ---------------------
-    "lsh_neardup_recall_sampled",
-    "unigram_lm_roundtrip_stats",
-    "bpe_roundtrip_stats",
-    "wordpiece_roundtrip_stats",
-    "ivfpq_roundtrip_topk",
-    "jl_distortion_audit",
-    "ivfpq_probe_recall_curve",
-    "winnowing_fingerprints",
-    "winnowing_neardups",
-    "winnowing_source_stats",
-    "shard_snake_packing",
-    # -- plans rewritten by round-13 optimizations (7) ----------------
-    "kcore_membership",
-    "bfs_distances",
-    "audio_features",
-    "dedup_cascade_verdict",
-    "psi_drift_by_source",
-    "label_propagation_communities",
-    "community_quality",
-    # -- r08-stale (the 25 left by round 12's backfill) ---------------
-    "cluster_size_histogram",
-    "corpus_shuffle_order",
-    "customer_distribution",
-    "data_quality_checks",
-    "diagnostics",
-    "document_chunks",
-    "domain_mixture_weights",
-    "dominant_small_part_suppliers",
-    "forecast_revenue",
-    "frame_sampling",
-    "importance_resample",
-    "important_stock",
-    "json_props_stats",
-    "length_bucket_packing",
-    "multimodal_resize",
-    "part_supplier_diversity",
-    "peak_concurrent_sessions",
-    "priority_order_counts",
-    "promo_revenue_share",
-    "ranking_suite",
-    "returned_item_customers",
-    "session_window_agg_bucketed",
-    "shipping_priority_buckets",
-    "stratified_sample",
-    "waiting_suppliers",
-    # -- r09-stale backfill (7, LLM-data ops first) -------------------
-    "simhash_neardups",
-    "url_canonical_dedup",
-    "cdc_dedup_spans",
-    "host_dedup_profile",
-    "lsh_buckets",
-    "pq_recall_eval",
-    "pq_topk_refined",
-]
-
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
 
 def collect() -> tuple[dict[str, QueryFn], dict[str, str]]:
-    """All registered (queries, oracles), driver window hoisted first.
+    """All registered (queries, oracles), in ``_MODULES`` order.
 
     CACHE CONTRACT: several query functions ``persist()`` a *reduced*
     intermediate (per-key grid, coded corpus, histogram) that feeds
     multiple consumers in the same plan, and deliberately do NOT
     unpersist — the frame must stay cached until the caller has
     consumed the returned DataFrame.  The harness callers (the external
-    driver, bench.py, scripts/driver_sim.py, tests) all call
+    driver, scripts/driver_sim.py, tests) all call
     ``spark.catalog.clearCache()`` between queries.  Any other
     long-lived session embedding these functions must do the same, or
     cached fact-derived frames accumulate across queries.
@@ -253,11 +111,4 @@ def collect() -> tuple[dict[str, QueryFn], dict[str, str]]:
             if name not in mod.QUERIES:
                 raise ValueError(f"oracle without query: {name} in {modname}")
             oracles[name] = sql
-    missing = [n for n in _WINDOW if n not in queries]
-    if missing:
-        raise ValueError(f"_WINDOW names not registered: {missing}")
-    if len(set(_WINDOW)) != len(_WINDOW):
-        raise ValueError("_WINDOW has duplicates")
-    ordered = {n: queries[n] for n in _WINDOW}
-    ordered.update((n, f) for n, f in queries.items() if n not in ordered)
-    return ordered, oracles
+    return queries, oracles

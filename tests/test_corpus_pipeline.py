@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import shutil
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -11,6 +13,7 @@ from sleep_edf_data_pipeline_spark.plans.corpus_pipeline import (
     build_corpus,
 )
 from sleep_edf_data_pipeline_spark.quality.validate import CheckFailure
+from sleep_edf_data_pipeline_spark.tables import table
 
 
 def test_corpus_build_end_to_end(spark, sf_dir, tmp_path):
@@ -82,3 +85,48 @@ def test_corpus_build_with_selection(spark, sf_dir, tmp_path):
     assert rows["corpus_split"] == rows["corpus_chunks"]
     sel = built["corpus_selected"]
     assert {"avg_llr", "mean_nll"} <= set(sel.columns)
+
+
+def _persistent_rdd_ids(spark) -> set[int]:
+    return set(spark.sparkContext._jsc.getPersistentRDDs())
+
+
+def test_corpus_build_releases_what_it_cached(spark, sf_dir, tmp_path):
+    """build_corpus leaves no cached frame behind: neither its cached
+    models nor the operators' own persists (the MinHash signatures and,
+    on the select path, the DSIR histogram).  A frame the caller cached
+    before the build stays cached.  The input is a private copy, so no
+    frame cached by an earlier build can stand in for this build's."""
+    src = tmp_path / "src"
+    src.mkdir()
+    shutil.copyfile(f"{sf_dir}/documents.parquet", src / "documents.parquet")
+    mine = table(spark, str(src), "documents").select("doc_id").persist()
+    mine.count()
+    before = _persistent_rdd_ids(spark)
+    build_corpus(spark, str(src), str(tmp_path / "out"), select=True)
+    assert _persistent_rdd_ids(spark) - before == set()
+    assert mine.storageLevel.useMemory
+    mine.unpersist()
+
+
+def test_corpus_rebuild_of_rewritten_input_matches_clean_build(
+    spark, sf_dir, sf_dir_mid, tmp_path
+):
+    """Rewrite the documents file in place and build again in the same
+    session: the audit must equal a build over a fresh copy of the new
+    data.  A signature frame left cached by the first build matches the
+    second build's plan (same path) and would serve the old documents'
+    near-dup pairs."""
+    src = tmp_path / "src"
+    src.mkdir()
+    shutil.copyfile(f"{sf_dir_mid}/documents.parquet", src / "documents.parquet")
+    build_corpus(spark, str(src), str(tmp_path / "first"))
+
+    shutil.copyfile(f"{sf_dir}/documents.parquet", src / "documents.parquet")
+    audit, _ = build_corpus(spark, str(src), str(tmp_path / "second"))
+
+    fresh = tmp_path / "fresh"
+    fresh.mkdir()
+    shutil.copyfile(f"{sf_dir}/documents.parquet", fresh / "documents.parquet")
+    clean, _ = build_corpus(spark, str(fresh), str(tmp_path / "clean"))
+    assert sorted(audit.collect()) == sorted(clean.collect())

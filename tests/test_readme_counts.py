@@ -22,3 +22,11 @@ def test_readme_counts_match_registry():
         f"{len(oracles)} with oracles' (line-wrapped) — update README.md "
         "alongside the registry"
     )
+
+
+def test_registry_is_complete():
+    """Exact registry size: update explicitly when queries are added."""
+    queries, oracles = registry.collect()
+    assert len(queries) == 235
+    assert len(oracles) == 228
+    assert all(name in queries for name in oracles)
